@@ -8,9 +8,17 @@ live under the pipeline root:
 - ``_manifest``  — (stage, partition, run_id) rows; a partition appears
   once its stage output is durably written. Resume = anti-join pending
   partitions against this.
-- ``_lineage``   — (stage, rows_in, rows_out, parse_failures, dropped,
-  wall_ms, run_id) per stage run; row counts come from ``df.observe``
-  (computed during the write action itself — no extra pass).
+- ``_lineage``   — (stage, rows_out, parse_failures, dropped,
+  dropped_overflow, wall_ms, n_partitions, run_id) per stage run; row
+  counts come from ``df.observe`` (computed during the write action
+  itself — no extra pass).
+
+Both tables are appended from driver-side rows built as a ``pyarrow``
+table against a pinned schema (:data:`MANIFEST_SCHEMA`,
+:data:`LINEAGE_SCHEMA`), which Spark plans as a JVM ``LocalRelation``.
+``createDataFrame(list_of_dicts)`` would instead run a PythonRDD job
+(pickle → parallelize → Python workers) costing ~1 s per append on
+local[4] — more than the stage work it records at small scale.
 
 Crash atomicity (parquet can't give Iceberg's snapshot isolation, so we
 approximate it): stage data is written under a ``_run_id=<id>`` partition
@@ -32,6 +40,8 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,31 +54,61 @@ RUN_COL = "_run_id"  # data-side partition column scoping each write attempt
 NULL_PARTITION = "__NULL__"
 
 
+# Pinned bookkeeping schemas: the exact names, alphabetical order and
+# string/bigint types that schema inference gave the rows written by older
+# engine versions, so roots written before and after read as one table.
+MANIFEST_SCHEMA = pa.schema([
+    ("partition", pa.string()),
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+])
+LINEAGE_SCHEMA = pa.schema([
+    ("dropped", pa.int64()),
+    ("dropped_overflow", pa.int64()),
+    ("n_partitions", pa.int64()),
+    ("parse_failures", pa.int64()),
+    ("rows_out", pa.int64()),
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+    ("wall_ms", pa.int64()),
+])
+_SCHEMAS = {MANIFEST: MANIFEST_SCHEMA, LINEAGE: LINEAGE_SCHEMA}
+
+
 def _partition_key(partition_col: str) -> F.Column:
     return F.coalesce(F.col(partition_col).cast("string"), F.lit(NULL_PARTITION))
 
 
+def _nothing_written(e: AnalysisException) -> bool:
+    """A read failed only because nothing was written yet: the path is
+    absent (fresh run), or holds no data files (empty input)."""
+    return e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _append(spark: SparkSession, root: str, table: str, rows: list[dict]) -> None:
-    df = spark.createDataFrame(rows)
+    # a pyarrow table plans as a JVM LocalRelation — no Python-worker job
+    df = spark.createDataFrame(pa.Table.from_pylist(rows, schema=_SCHEMAS[table]))
     df.coalesce(1).write.mode("append").parquet(os.path.join(root, table))
 
 
 def read_manifest(spark: SparkSession, root: str) -> DataFrame | None:
-    path = os.path.join(root, MANIFEST)
     try:
-        return spark.read.parquet(path)
-    except Exception:  # AnalysisException: path does not exist (fresh run)
+        return spark.read.parquet(os.path.join(root, MANIFEST))
+    except AnalysisException as e:
+        if not _nothing_written(e):
+            raise
         return None
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    path = os.path.join(root, LINEAGE)
     try:
         # mergeSchema: lineage columns may grow across engine versions
         # (e.g. dropped_overflow, added r3) — a root resumed across the
         # upgrade holds files with both shapes; old rows read as NULL
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
+        return spark.read.option("mergeSchema", "true").parquet(os.path.join(root, LINEAGE))
+    except AnalysisException as e:
+        if not _nothing_written(e):
+            raise
         return None
 
 
@@ -217,5 +257,10 @@ def run_stage(
     )
     try:
         return read_stage(spark, root, stage, partition_col)
-    except Exception:  # nothing ever written (empty input) — pass through
+    except AnalysisException as e:
+        # nothing ever written (empty input) → pass through; any other
+        # failure must surface, or a resume would silently return only the
+        # pending rows instead of the manifested table
+        if not _nothing_written(e):
+            raise
         return pending

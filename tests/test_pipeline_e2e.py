@@ -219,6 +219,104 @@ def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, mo
     assert sorted(lin.rows_out.tolist()) == [0, 3]  # crash run never logged
 
 
+def _days_frame(spark, days):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [(i, dt.date(2026, 1, d), f"v{i}") for i, d in enumerate(days)],
+        ["id", "day", "v"],
+    )
+
+
+def test_bookkeeping_schemas_pinned(spark, tmp_path):
+    """`_manifest` / `_lineage` keep the names, alphabetical order and
+    string/bigint types that list-of-dicts inference gave older roots."""
+    root = str(tmp_path / "root")
+    ln.run_stage(spark, root, "s", _days_frame(spark, [1, 2]), partition_col="day")
+
+    def shape(table):
+        return [(f.name, f.dataType.simpleString()) for f in spark.read.parquet(f"{root}/{table}").schema]
+
+    assert shape(ln.MANIFEST) == [("partition", "string"), ("run_id", "string"), ("stage", "string")]
+    assert shape(ln.LINEAGE) == [
+        ("dropped", "bigint"),
+        ("dropped_overflow", "bigint"),
+        ("n_partitions", "bigint"),
+        ("parse_failures", "bigint"),
+        ("rows_out", "bigint"),
+        ("run_id", "string"),
+        ("stage", "string"),
+        ("wall_ms", "bigint"),
+    ]
+
+
+def test_append_plans_local_relation(spark, tmp_path, monkeypatch):
+    """The bookkeeping frame is a JVM LocalRelation, not a LogicalRDD fed
+    by a Python-worker job — with the Arrow conf on or off."""
+    frames = []
+    real_create = type(spark).createDataFrame
+
+    def capture(self, *args, **kwargs):
+        frames.append(real_create(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(type(spark), "createDataFrame", capture)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf)
+    try:
+        for enabled in ("true", "false"):
+            spark.conf.set(conf, enabled)
+            ln._append(spark, str(tmp_path), ln.MANIFEST, [{"stage": "s", "partition": "p", "run_id": "r1"}])
+    finally:
+        spark.conf.set(conf, before)
+    assert [f._jdf.queryExecution().logical().getClass().getSimpleName() for f in frames] == [
+        "LocalRelation",
+        "LocalRelation",
+    ]
+    assert spark.read.parquet(f"{tmp_path}/{ln.MANIFEST}").count() == 2
+
+
+def test_resume_root_written_by_inferred_bookkeeping(spark, tmp_path, monkeypatch):
+    """A root whose first run's bookkeeping came from the older
+    `createDataFrame(list_of_dicts)` append resumes cleanly: manifested
+    partitions are skipped and no row is read twice."""
+    root = str(tmp_path / "root")
+    real_append = ln._append
+
+    def inferred_append(spark_, root_, table, rows):
+        spark_.createDataFrame(rows).coalesce(1).write.mode("append").parquet(f"{root_}/{table}")
+
+    monkeypatch.setattr(ln, "_append", inferred_append)
+    ln.run_stage(spark, root, "s", _days_frame(spark, [1, 1, 2]), partition_col="day")
+    monkeypatch.setattr(ln, "_append", real_append)
+
+    out = ln.run_stage(spark, root, "s", _days_frame(spark, [1, 1, 2, 3]), partition_col="day")
+    assert sorted(r.id for r in out.select("id").collect()) == [0, 1, 2, 3]
+    lin = ln.read_lineage(spark, root).toPandas()
+    assert sorted(zip(lin.rows_out, lin.n_partitions)) == [(1, 1), (3, 2)]
+    assert ln.done_partitions(spark, root, "s") == {"2026-01-01", "2026-01-02", "2026-01-03"}
+
+
+def test_run_stage_empty_input_passes_through(spark, tmp_path):
+    """Nothing written yet (empty input, no stage files) is the one read
+    failure run_stage absorbs."""
+    empty = _days_frame(spark, [1]).limit(0)
+    out = ln.run_stage(spark, str(tmp_path / "root"), "s", empty, partition_col="day")
+    assert out.count() == 0
+
+
+def test_run_stage_read_failure_propagates(spark, tmp_path, monkeypatch):
+    """Any other failure reading the manifested table surfaces: falling
+    back to the pending input would make a resume count only new rows."""
+
+    def broken_read(*args, **kwargs):
+        raise RuntimeError("read failed")
+
+    monkeypatch.setattr(ln, "read_stage", broken_read)
+    with pytest.raises(RuntimeError, match="read failed"):
+        ln.run_stage(spark, str(tmp_path / "root"), "s", _days_frame(spark, [1]), partition_col="day")
+
+
 def test_curation_pipeline_checkpointed_resume(spark, tmp_path):
     """The curation pipeline (score → dedup+filter) runs under the same
     manifest/lineage machinery as the log pipeline: correct counts vs a
