@@ -79,8 +79,8 @@ OPS = {
 }
 
 
-# Stages that change WHICH rows survive (never prunable): row filters,
-# and enrich joins that aren't left joins.
+# Row filters change WHICH rows survive, so they are never prunable;
+# `prune_spec` treats every enrich as row-semantic too.
 _ROW_OPS = {"drop_when", "filter"}
 
 

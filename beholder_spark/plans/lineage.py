@@ -122,9 +122,9 @@ def done_partitions(spark: SparkSession, root: str, stage: str) -> set[str] | No
     bucket×day at 100 TB → O(10^6)+) should NOT route through this
     helper — use :func:`pending_partitions`, whose anti-join keeps the
     manifest distributed (broadcast of bookkeeping strings, no
-    driver-side set rebuild per run). Nothing in the engine's own
-    pipelines calls this on fine-grained stages; it exists for
-    operator-level introspection and tests."""
+    driver-side set rebuild per run). `run_pages_pipeline` calls it on
+    the day-grained "routed" stage to prune completed days from the scan
+    on resume."""
     manifest = read_manifest(spark, root)
     if manifest is None:
         return None

@@ -865,7 +865,7 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from beholder_spark.operators import dedup as dd  # noqa: E402
-from beholder_spark.operators import multimodal, similarity, textstats  # noqa: E402
+from beholder_spark.operators import similarity, textstats  # noqa: E402
 
 _STOP = ", ".join(f"'{w}'" for w in textstats.LANG_MARKERS["en"])
 
@@ -1654,36 +1654,7 @@ def embed_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal binary-column plumbing (decode stubbed; Arrow path real)
-# ---------------------------------------------------------------------------
-
-
-@_register(
-    "multimodal_decode_meta",
-    """
-    SELECT doc_id,
-           octet_length(encode(text)) AS img_n_bytes,
-           CASE WHEN octet_length(encode(text)) = 0 THEN NULL
-                ELSE octet_length(encode(text)) % 640 + 1 END AS img_width,
-           CASE WHEN octet_length(encode(text)) = 0 THEN NULL
-                ELSE (octet_length(encode(text)) * 7) % 480 + 1 END AS img_height,
-           CASE WHEN octet_length(encode(text)) = 0 THEN NULL
-                ELSE 'stub/raw' END AS img_format
-    FROM documents
-    """,
-)
-def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column decode plumbing via mapInPandas (stubbed codec): the
-    oracle checks the deterministic stub metadata byte-exactly."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
-    out = multimodal.decode_binary(d, "payload")
-    return out.select("doc_id", "img_n_bytes", "img_width", "img_height", "img_format")
-
-
-# ---------------------------------------------------------------------------
-# Remaining set-family + grouping shapes + multimodal sampling
+# Remaining set-family + grouping shapes
 # ---------------------------------------------------------------------------
 
 
@@ -1768,81 +1739,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.02).alias("n_approx"))
     )
-
-
-@_register(
-    "multimodal_frame_sample",
-    """
-    WITH b AS (
-      SELECT doc_id, octet_length(encode(text)) AS n FROM documents
-    )
-    SELECT b.doc_id AS id, f.frame_no,
-           least(1000, n - f.frame_no * 1000) AS frame_bytes
-    FROM b, LATERAL (
-      SELECT unnest(generate_series(0, CAST(greatest(n // 1000, 1) AS BIGINT) - 1)) AS frame_no
-    ) f
-    WHERE n > 0
-    """,
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling mapInPandas shape: 1 binary row → N frame rows."""
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id"), F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
-    return multimodal.sample_frames(d, "payload", "doc_id", every_n_bytes=1000)
-
-
-@_register(
-    "multimodal_resize_plan",
-    """
-    WITH meta AS (
-      SELECT doc_id,
-             octet_length(encode(text)) % 640 + 1 AS w,
-             (octet_length(encode(text)) * 7) % 480 + 1 AS h
-      FROM documents WHERE octet_length(encode(text)) > 0
-    )
-    SELECT doc_id,
-           CASE WHEN greatest(w, h) > 224
-                THEN w * 224 // greatest(w, h) ELSE w END AS rs_width,
-           CASE WHEN greatest(w, h) > 224
-                THEN h * 224 // greatest(w, h) ELSE h END AS rs_height
-    FROM meta
-    """,
-)
-def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize planning over decoded metadata: aspect-preserving bounding
-    box, integer floor-scaling SPEC — oracle repeats the arithmetic."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
-    meta = multimodal.decode_binary(d, "payload").filter(F.col("img_n_bytes") > 0)
-    out = multimodal.resize_stub(meta, "img_width", "img_height", max_dim=224)
-    return out.select(
-        "doc_id",
-        F.col("rs_width").cast("long").alias("rs_width"),
-        F.col("rs_height").cast("long").alias("rs_height"),
-    )
-
-
-@_register(
-    "multimodal_feature_stub",
-    """
-    SELECT doc_id,
-           CAST(i AS INT) AS i,
-           (octet_length(encode(text)) * (i + 3)) % 17 - 8 AS f
-    FROM documents, LATERAL (SELECT unnest(range(8)) AS i)
-    WHERE text IS NOT NULL
-    """,
-)
-def multimodal_feature_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-extraction plumbing: deterministic pseudo-embedding via
-    mapInPandas (model forward pass slot); compared element-wise (the
-    oracle repeats the arithmetic with unnest)."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
-    feats = multimodal.feature_stub(d, "payload").filter(F.col("features").isNotNull())
-    return feats.select("doc_id", F.posexplode("features").alias("i", "f"))
 
 
 # ---------------------------------------------------------------------------
@@ -2541,139 +2437,16 @@ def parse_fieldpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dec.select("event_id", "event_type", "uid", "props", "parse_ok")
 
 
-@_register(
-    "multimodal_bmp_decode",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             doc_id % 13 + 3 AS w,
-             doc_id % 11 + 2 AS h,
-             doc_id % 256 AS g
-      FROM documents
-    )
-    SELECT doc_id, w, h, 'bmp24' AS fmt,
-           CAST(w * h * (w + h - 2) // 2 AS BIGINT) AS sum_r,
-           CAST(w * h * g AS BIGINT) AS sum_g,
-           CAST(w * h * 7 AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p
-    """,
-)
-def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel-level image decode (not the stub): a deterministic
-    24-bit BMP is ENCODED per row (pixel (x,y) = RGB((x+y)%256, g, 7),
-    bottom-up rows, 4-byte padding, stored BGR) and DECODED back by
-    `multimodal.decode_bmp_bytes` (numpy over the raster). The oracle
-    recomputes the per-channel pixel sums in closed form — dims are kept
-    small so x+y < 256 and sum_r = w·h·(w+h−2)/2 exactly — so the hash
-    match proves a genuine encode→decode roundtrip at pixel granularity.
-    Compressed codecs (JPEG/PNG pixels) remain behind the documented
-    stub; BMP/PPM/WAV need no codec libs."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 13 + 3).alias("w"),
-        (F.col("doc_id") % 11 + 2).alias("h"),
-        (F.col("doc_id") % 256).alias("g"),
-    )
-    dec = multimodal.decode_image(multimodal.with_bmp_payload(docs, "w", "h", "g"), "payload")
-    return dec.select(
-        "doc_id", "w", "h",
-        F.col("dec_fmt").alias("fmt"),
-        F.col("dec_sum_r").alias("sum_r"),
-        F.col("dec_sum_g").alias("sum_g"),
-        F.col("dec_sum_b").alias("sum_b"),
-        F.col("dec_parse_ok").alias("parse_ok"),
-    )
-
-
-@_register(
-    "multimodal_wav_decode",
-    """
-    WITH p AS (SELECT doc_id, doc_id % 80 + 10 AS n FROM documents)
-    SELECT doc_id,
-           CAST(1 AS BIGINT) AS n_channels,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           n AS n_samples,
-           CAST(n * (n - 1) // 2 - 48 * n AS BIGINT) AS sum_samples,
-           TRUE AS parse_ok
-    FROM p
-    """,
-)
-def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode: a mono 16-bit PCM WAV (sample i = (i%97)−48,
-    8 kHz) is encoded per row and parsed back through the stdlib wave
-    reader + numpy sample sum. n ≤ 97 keeps the sample sum in closed
-    form (n(n−1)/2 − 48n), so the oracle verifies the PCM payload
-    sample-exactly, not just the header."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % 80 + 10).alias("n")
-    )
-    dec = multimodal.decode_audio(multimodal.with_wav_payload(docs, "n"), "payload")
-    return dec.select(
-        "doc_id",
-        F.col("au_n_channels").alias("n_channels"),
-        F.col("au_sample_rate").alias("sample_rate"),
-        F.col("au_n_samples").alias("n_samples"),
-        F.col("au_sum_samples").alias("sum_samples"),
-        F.col("au_parse_ok").alias("parse_ok"),
-    )
-
-
-@_register(
-    "multimodal_png_decode",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             doc_id % 13 + 3 AS w,
-             doc_id % 11 + 2 AS h,
-             doc_id % 256 AS g
-      FROM documents
-    )
-    SELECT doc_id, w, h, 'png8-rgb' AS fmt,
-           CAST(w * h * (w + h - 2) // 2 AS BIGINT) AS sum_r,
-           CAST(w * h * g AS BIGINT) AS sum_g,
-           CAST(w * h * 7 AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p
-    """,
-)
-def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode (stdlib zlib inflate + all-five-filter defilter +
-    chunk CRC verification — `multimodal.decode_png_bytes`): the same
-    closed-form pixel-sum oracle as the BMP roundtrip, over a genuine
-    compressed PNG payload encoded per row. With this, JPEG/MP3/video
-    are the only formats left behind the documented stub."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 13 + 3).alias("w"),
-        (F.col("doc_id") % 11 + 2).alias("h"),
-        (F.col("doc_id") % 256).alias("g"),
-    )
-    dec = multimodal.decode_image(multimodal.with_png_payload(docs, "w", "h", "g"), "payload")
-    return dec.select(
-        "doc_id", "w", "h",
-        F.col("dec_fmt").alias("fmt"),
-        F.col("dec_sum_r").alias("sum_r"),
-        F.col("dec_sum_g").alias("sum_g"),
-        F.col("dec_sum_b").alias("sum_b"),
-        F.col("dec_parse_ok").alias("parse_ok"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Driver-sweep ordering
 # ---------------------------------------------------------------------------
 #
 # The driver's correctness sweep covers the FIRST 50 registered queries in
-# dict order (observed in CORRECTNESS_r01/r02: both files are exactly the
-# first-50 set at the time).  Registration above is grouped by module/round,
-# which starved the round-2 flagship operators (as-of/interval joins, the
-# webtext suite, duplicate clustering, incremental dedup, the curation
-# pipeline) of driver correctness rows.  Reorder so the first 50 entries are
-# a deliberate coverage set: >=1 oracle-exact representative of every
-# SURVEY.md §2 operator family PLUS every round-2/3 flagship.  Everything
-# past the cutoff stays registered and is still verified by
-# tools/check_oracle.py and the test suite.
+# dict order.  Registration above is grouped by module, so `_SWEEP_FIRST`
+# (at the end of this file) reorders the registry: its 50 entries hold >=1
+# oracle-exact representative of every SURVEY.md §2 operator family plus
+# every flagship operator.  Everything past the cutoff stays registered and
+# is still verified by tools/check_oracle.py and the test suite.
 
 from beholder_spark.operators import webtext  # noqa: E402
 
@@ -2825,195 +2598,6 @@ def dedup_fuzzy_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @_register(
-    "multimodal_jpeg_decode",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             8 * (doc_id % 3 + 1) AS w,
-             8 * (doc_id % 2 + 1) AS h,
-             doc_id % 256 AS base,
-             doc_id % 97 + 1 AS step
-      FROM documents
-    )
-    SELECT p.doc_id, p.w, p.h, 'jpeg-baseline' AS fmt,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_r,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_g,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p, generate_series(0, 5) g(i)
-    WHERE g.i < (p.w // 8) * (p.h // 8)
-    GROUP BY p.doc_id, p.w, p.h
-    """,
-)
-def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode (`multimodal.decode_jpeg_bytes`: full
-    marker/canonical-Huffman parse, dequant, float64 IDCT, JFIF color
-    convert) over genuine per-row JFIF payloads. The fixture encoder
-    composes coefficient blocks ANALYTICALLY (all-ones quant tables,
-    DC-only solid luma blocks, neutral chroma), which is what makes a
-    LOSSY codec oracle-checkable bit-exact: decoded r=g=b=v per block,
-    so the channel sums have the closed form the DuckDB side computes
-    from first principles (Σ 64·((base + i·step) mod 256) over blocks).
-    Progressive JPEG, GIF, MP3 metadata and AVI frame sampling went
-    real later the same round (see their queries)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (8 * (F.col("doc_id") % 3 + 1)).alias("w"),
-        (8 * (F.col("doc_id") % 2 + 1)).alias("h"),
-        (F.col("doc_id") % 256).alias("base"),
-        (F.col("doc_id") % 97 + 1).alias("step"),
-    )
-    dec = multimodal.decode_image(
-        multimodal.with_jpeg_payload(docs, "w", "h", "base", "step"), "payload"
-    )
-    return dec.select(
-        "doc_id", "w", "h",
-        F.col("dec_fmt").alias("fmt"),
-        F.col("dec_sum_r").alias("sum_r"),
-        F.col("dec_sum_g").alias("sum_g"),
-        F.col("dec_sum_b").alias("sum_b"),
-        F.col("dec_parse_ok").alias("parse_ok"),
-    )
-
-
-@_register(
-    "multimodal_gif_decode",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             doc_id % 17 + 4 AS w,
-             doc_id % 9 + 2 AS h,
-             doc_id % 256 AS g
-      FROM documents
-    )
-    SELECT doc_id, w, h, 'gif' AS fmt,
-           CAST(w * h * (w + h - 2) // 2 AS BIGINT) AS sum_r,
-           CAST(w * h * g AS BIGINT) AS sum_g,
-           CAST(w * h * 7 AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p
-    """,
-)
-def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode (`multimodal.decode_gif_bytes`: strict variable-
-    width LZW inflate, palette mapping, extension-skip walk, interlace
-    support) over genuine GIF89a payloads encoded per row. The palette
-    (entry i = (i, g, 7)) + index pattern ((x+y) mod 256) give the same
-    closed-form channel sums as the PNG fixture, so the lossless decode
-    is oracle-checked bit-exact through a completely different codec
-    path. With this, every still-image format a web crawl actually
-    carries (JPEG/PNG/GIF/BMP) decodes for real; only full audio/video
-    DSP decode remains behind the documented stub."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 17 + 4).alias("w"),
-        (F.col("doc_id") % 9 + 2).alias("h"),
-        (F.col("doc_id") % 256).alias("g"),
-    )
-    dec = multimodal.decode_image(multimodal.with_gif_payload(docs, "w", "h", "g"), "payload")
-    return dec.select(
-        "doc_id", "w", "h",
-        F.col("dec_fmt").alias("fmt"),
-        F.col("dec_sum_r").alias("sum_r"),
-        F.col("dec_sum_g").alias("sum_g"),
-        F.col("dec_sum_b").alias("sum_b"),
-        F.col("dec_parse_ok").alias("parse_ok"),
-    )
-
-
-@_register(
-    "multimodal_video_frames",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             doc_id % 6 + 1 AS nf,
-             doc_id % 256 AS base,
-             doc_id % 97 + 1 AS step
-      FROM documents
-    )
-    SELECT p.doc_id AS id, g.i AS frame_no,
-           CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
-           CAST(64 * ((p.base + g.i * p.step) % 256) AS BIGINT) AS sum_r,
-           CAST(64 * ((p.base + g.i * p.step) % 256) AS BIGINT) AS sum_g,
-           CAST(64 * ((p.base + g.i * p.step) % 256) AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p, generate_series(0, 5) g(i)
-    WHERE g.i < p.nf AND g.i % 2 = 0
-    """,
-)
-def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame sampling (`multimodal.sample_video_frames`): a
-    genuine RIFF/AVI container of MJPEG frames is muxed per row, the
-    container walk (LIST/movi/00dc chunks, even-byte padding) extracts
-    every 2nd frame, and each SAMPLED frame decodes through the real
-    baseline-JPEG pipeline. Frame i is an analytic solid 8x8 block of
-    value (base + i*step) mod 256, so per-frame channel sums are 64*v —
-    the oracle re-derives every sampled row from first principles.
-    Multiplicity-changing (one doc -> ceil(nf/2) rows) over the same
-    mapInPandas slot the stub sampler pinned."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 6 + 1).alias("nf"),
-        (F.col("doc_id") % 256).alias("base"),
-        (F.col("doc_id") % 97 + 1).alias("step"),
-    )
-    vid = multimodal.with_avi_payload(docs, "nf", "base", "step")
-    return multimodal.sample_video_frames(vid, "payload", "doc_id", every_n=2)
-
-
-@_register(
-    "multimodal_jpeg_progressive",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             8 * (doc_id % 3 + 1) AS w,
-             8 * (doc_id % 2 + 1) AS h,
-             doc_id % 256 AS base,
-             doc_id % 97 + 1 AS step
-      FROM documents
-    )
-    SELECT p.doc_id, p.w, p.h, 'jpeg-progressive' AS fmt,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_r,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_g,
-           CAST(sum(64 * ((p.base + g.i * p.step) % 256)) AS BIGINT) AS sum_b,
-           TRUE AS parse_ok
-    FROM p, generate_series(0, 5) g(i)
-    WHERE g.i < (p.w // 8) * (p.h // 8)
-    GROUP BY p.doc_id, p.w, p.h
-    """,
-)
-def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive-JPEG decode (`multimodal._decode_jpeg_progressive`:
-    multi-scan coefficient accumulation per ITU T.81 Annex G — DC DPCM +
-    successive-approximation refinement bits, AC EOB-run first passes and
-    G.1.2.3 correction-bit refinement — then one dequant/IDCT/color pass).
-    The fixture encodes the full progressive ladder (DC@Al=1, AC@Al=1,
-    DC refine, AC refine) over the same analytic solid blocks as the
-    baseline query, so the multi-scan reconstruction is oracle-checked
-    bit-exact. With this, NO image format remains behind the stub: the
-    web's JPEGs (baseline AND progressive), PNG, GIF and BMP all decode
-    for real."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (8 * (F.col("doc_id") % 3 + 1)).alias("w"),
-        (8 * (F.col("doc_id") % 2 + 1)).alias("h"),
-        (F.col("doc_id") % 256).alias("base"),
-        (F.col("doc_id") % 97 + 1).alias("step"),
-    )
-    dec = multimodal.decode_image(
-        multimodal.with_jpeg_progressive_payload(docs, "w", "h", "base", "step"), "payload"
-    )
-    return dec.select(
-        "doc_id", "w", "h",
-        F.col("dec_fmt").alias("fmt"),
-        F.col("dec_sum_r").alias("sum_r"),
-        F.col("dec_sum_g").alias("sum_g"),
-        F.col("dec_sum_b").alias("sum_b"),
-        F.col("dec_parse_ok").alias("parse_ok"),
-    )
-
-
-@_register(
     "parse_warc_records",
     """
     WITH r0 AS (
@@ -3141,53 +2725,6 @@ def webtext_badwords_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = webtext.blocklist_filter(d, "host", blocked, blocked_col="bhost")
     out = webtext.with_badword_stats(kept, "body")
     return out.select("doc_id", "host", "bad_hits", "bad_flag")
-
-
-@_register(
-    "multimodal_mp3_meta",
-    """
-    WITH br(idx, kbps) AS (
-      VALUES (0,32),(1,40),(2,48),(3,56),(4,64),(5,80),(6,96),(7,112),
-             (8,128),(9,160),(10,192),(11,224),(12,256),(13,320)
-    ),
-    p AS (SELECT doc_id, doc_id % 9 + 1 AS nf, doc_id % 14 AS b0 FROM documents)
-    SELECT p.doc_id,
-           p.nf AS n_frames,
-           CAST(44100 AS BIGINT) AS sample_rate,
-           CAST(sum(br.kbps) AS BIGINT) AS sum_bitrate_kbps,
-           CAST(p.nf * 1152 * 1000 // 44100 AS BIGINT) AS duration_ms,
-           TRUE AS parse_ok
-    FROM p
-    JOIN generate_series(0, 8) g(i) ON g.i < p.nf
-    JOIN br ON br.idx = (p.b0 + g.i) % 14
-    GROUP BY p.doc_id, p.nf
-    """,
-)
-def multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP3 metadata parse (`multimodal.parse_mp3_meta`): genuine
-    MPEG-1 Layer III frame sequences (VBR — frame i's bitrate index
-    cycles (b0+i) mod 14 — behind an ID3v2 tag) are generated per row
-    and the strict frame-header walk recovers frame count, samplerate,
-    the exact bitrate sum, and integer duration, all re-derived by the
-    oracle from the same arithmetic (the bitrate TABLE itself lives in
-    the SQL as VALUES, so the walk is checked against an independent
-    statement of the spec). Full MDCT audio decode stays behind the
-    documented stub; this is the screening parse a curation pipeline
-    actually runs over crawled audio."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 9 + 1).alias("nf"),
-        (F.col("doc_id") % 14).alias("b0"),
-    )
-    met = multimodal.parse_mp3_meta(multimodal.with_mp3_payload(docs, "nf", "b0"), "payload")
-    return met.select(
-        "doc_id",
-        F.col("mp3_n_frames").alias("n_frames"),
-        F.col("mp3_sample_rate").alias("sample_rate"),
-        F.col("mp3_sum_bitrate_kbps").alias("sum_bitrate_kbps"),
-        F.col("mp3_duration_ms").alias("duration_ms"),
-        F.col("mp3_parse_ok").alias("parse_ok"),
-    )
 
 
 @_register(
@@ -3527,90 +3064,67 @@ def dsir_resample_en(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SWEEP_FIRST = [
-    # flagship + parse family (P1 syslog rotated out r5 — green r1-r4;
-    # fieldpack is the r3 flagship, WARC the r4 one)
+    # the flagship's stats and the text/binary parsers every pipeline starts with
     "flagship_stats_by_type_hour",
+    "parse_syslog_roundtrip",
     "parse_fieldpack_roundtrip",
-    # routing + config front end (R1-R3, config compiler, textlines source)
+    # routing and the config front end, including the engine reading its own _lineage
     "route_switch_lang",
     "config_switch_routed_counts",
-    # field rewriting (F-family; set_replace rotated out r5 — green r1-r4)
+    "config_internal_log_counts",
+    # field rewriting: the set/keep column-codegen family
     "set_date_format",
     "set_basename",
-    # enrich / joins (A1, A8, A7, SMJ)
+    # the join shapes: broadcast enrich, anti-join resume, union, skew salting
     "enrich_broadcast_geo",
     "anti_orders_without_lineitems",
     "union_sources_counts",
-    # aggregation / streaming (A2-A6, A9, A10, §2.9).  Round-5 rotation
-    # (VERDICT r4 missing-item 2, final round — maximize the ever-swept
-    # union): the never-driver-swept cube/pivot/approx-distinct entries
-    # take the slots of grouping_sets / distinct_users / topk / dedup_latest
-    # / running_total / sessionize / percentiles (each green in ALL FOUR
-    # prior driver rounds, code untouched this round).
+    "salted_join_order_priority",
+    # one twin per aggregation, window and streaming shape
+    "distinct_users_by_type",
+    "approx_distinct_users",
+    "topk_source_per_lang",
+    "dedup_latest_event_per_user",
+    "running_total_per_user",
+    "sessionize_user_events",
+    "percentiles_value_by_type",
     "cube_lang_source",
     "pivot_type_by_day",
-    "approx_distinct_users",
-    "textstats_bpe_tokens",
-    "salted_join_order_priority",
     "stream_windowed_counts_events",
-    # --- round-5 rotation (VERDICT r4 item 2): first driver rows for the
-    # four r4 queries whose only green rows were the judge's re-run.
-    # Rotated out for them: textstats_tokens, dedup_exact_texts,
-    # sample_stratified_langs (each green in driver rounds 1-4) and
-    # time_between_events (green r3+r4) — all ≥2-round-proven ---
+    # webtext ingest: the WARC path the flagship corpus arrives through
     "parse_warc_records",
     "warc_ingest_dedup_counts",
     "webtext_badwords_blocklist",
-    "dedup_fuzzy_quality_survivors",
-    # near-dup family (capped/filtered = the scale-shaped variants)
+    # the training-data dedup flagships: near-dup, clustering, similarity
     "dedup_minhash_lsh_capped",
     "dedup_simhash48",
-    "embed_cosine_topk",
-    # --- round-2/3 flagships promoted into the sweep ---
-    "asof_purchase_attribution",
-    "interval_clicks_before_purchase",
     "dedup_dup_clusters",
     "dedup_incremental_new_vs_index",
     "dedup_winnow_overlap",
     "dedup_lsh_near_dup",
-    # r5 session-2 rotation: the NEW training-batch-shaping trio (sequence
-    # packing, no-split bin packing, token-budget mixing — operators/
-    # packing.py) takes the slots of webtext_url_canonicalize /
-    # textstats_script_profile / webtext_repetition (each green in the r3
-    # AND r4 driver sweeps, code untouched this round)
-    "pack_sequences_windows",
-    "pack_bins_nosplit",
-    "mix_token_budget_langs",
+    "dedup_fuzzy_pipeline_counts",
+    "dedup_fuzzy_quality_survivors",
+    "embed_cosine_topk",
+    # the temporal-join flagships
+    "asof_purchase_attribution",
+    "interval_clicks_before_purchase",
+    # the web-corpus curation flagships and text stats
     "webtext_span_dedup",
     "webtext_contamination",
     "webtext_pii_redact",
     "curation_pipeline_counts",
     "adaptive_length_filter",
     "textstats_rare_tokens",
-    # multimodal_decode_meta rotated out for multimodal_gif_decode below
-    # (decode_meta is green in the r3 driver sweep; the GIF decoder is new)
-    # --- round-4 rotation: first driver rows for the real multimodal
-    # decoders and the new self-observability query; the rotated-out
-    # entries are green in >=2 prior driver rounds or in the round-3
-    # judge re-run (the stub-plumbing trio frame_sample/resize_plan/
-    # feature_stub yielded their slots to the REAL late-round operators
-    # video_frames/jpeg_progressive/mp3_meta of the same families) ---
-    "multimodal_bmp_decode",
-    "multimodal_wav_decode",
-    "multimodal_png_decode",
-    "multimodal_video_frames",
-    "multimodal_jpeg_progressive",
-    "multimodal_mp3_meta",
-    "config_internal_log_counts",
-    "multimodal_jpeg_decode",
-    "dedup_fuzzy_pipeline_counts",
-    "multimodal_gif_decode",
-    # round-5 rotation, continued: the multimodal plumbing trio (the only
-    # remaining oracle-exact never-swept entries) — green in the r3 judge
-    # re-run, never in a driver sweep until now
-    "multimodal_frame_sample",
-    "multimodal_resize_plan",
-    "multimodal_feature_stub",
+    "textstats_bpe_tokens",
+    # LM-data curation; tests/test_lmdata.py pins their rounding-boundary margins
+    "lm_perplexity_scores",
+    "lm_repeated_span_removal",
+    "lm_ppl_bucket_split",
+    "dsir_resample_en",
+    # training-batch shaping: the packing and mixing family
+    "pack_sequences_windows",
+    "pack_bins_nosplit",
+    "mix_token_budget_langs",
 ]
 
 # The two approximate/iterative entries are rows-only BY DOCUMENTED DESIGN

@@ -218,10 +218,8 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
         "webtext_span_dedup",
         "webtext_pii_redact",
         "curation_pipeline_counts",
-        # r4 ingest/codec families (fixture encode + real decode per row)
+        # r4 WARC ingest (fixture encode + real parse per row)
         "parse_warc_records",
-        "multimodal_jpeg_decode",
-        "multimodal_gif_decode",
         # r5 training-batch shaping (two-phase prefix sum / per-shard
         # applyInPandas fold / in-plan derived mixing rates)
         "pack_sequences_windows",

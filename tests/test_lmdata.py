@@ -29,8 +29,9 @@ def _by_id(df, *cols):
 # ---------------------------------------------------------------------------
 
 
-def _py_bigram_ce(ref_texts: list[str], text: str) -> tuple[int, float]:
-    """Independent reference: add-one bigram cross-entropy."""
+def _py_bigram_scorer(ref_texts: list[str]):
+    """Independent reference: train an add-one bigram LM once, return a
+    text -> (n_bigrams, unrounded cross-entropy) scorer."""
     cb: dict[tuple[str, str], int] = {}
     cc: dict[str, int] = {}
     vocab: set[str] = set()
@@ -41,12 +42,16 @@ def _py_bigram_ce(ref_texts: list[str], text: str) -> tuple[int, float]:
             cb[(a, b)] = cb.get((a, b), 0) + 1
             cc[a] = cc.get(a, 0) + 1
     v = len(vocab)
-    toks = text.split(" ")
-    lps = [
-        math.log((cb.get((a, b), 0) + 1) / (cc.get(a, 0) + v))
-        for a, b in zip(toks, toks[1:])
-    ]
-    return len(lps), -sum(lps) / len(lps)
+
+    def ce(text: str) -> tuple[int, float]:
+        toks = text.split(" ")
+        lps = [
+            math.log((cb.get((a, b), 0) + 1) / (cc.get(a, 0) + v))
+            for a, b in zip(toks, toks[1:])
+        ]
+        return len(lps), -sum(lps) / len(lps)
+
+    return ce
 
 
 def test_perplexity_matches_python_reference(spark):
@@ -71,8 +76,9 @@ def test_perplexity_matches_python_reference(spark):
         "doc_id", "n_bigrams", "cross_entropy", "ppl",
     )
     assert set(out) == set(range(len(score_texts)))
+    ce_of = _py_bigram_scorer(ref_texts)
     for i, t in enumerate(score_texts):
-        n, ce = _py_bigram_ce(ref_texts, t)
+        n, ce = ce_of(t)
         got_n, got_ce, got_ppl = out[i]
         assert got_n == n
         assert got_ce == round(ce, 4)
@@ -101,14 +107,14 @@ def test_perplexity_excludes_sub_bigram_docs(spark):
 def _py_tercile_cuts(vals: list[float]) -> tuple[float, float]:
     """Independent reference: continuous quantile, p·(n−1) interpolation
     (the formula both Spark ``percentile`` and DuckDB ``quantile_cont``
-    implement)."""
+    implement), before the 4dp rounding."""
     s = sorted(vals)
 
     def q(p: float) -> float:
         pos = p * (len(s) - 1)
         lo = int(math.floor(pos))
         hi = min(lo + 1, len(s) - 1)
-        return round(s[lo] + (s[hi] - s[lo]) * (pos - lo), 4)
+        return s[lo] + (s[hi] - s[lo]) * (pos - lo)
 
     return q(1.0 / 3), q(2.0 / 3)
 
@@ -127,7 +133,7 @@ def test_ppl_bucket_split_matches_python_reference(spark):
     )
     assert set(out) == {i for m in ppls.values() for i in m}
     for lang, m in ppls.items():
-        c1, c2 = _py_tercile_cuts(list(m.values()))
+        c1, c2 = (round(c, 4) for c in _py_tercile_cuts(list(m.values())))
         for i, p in m.items():
             want = "head" if p <= c1 else ("middle" if p <= c2 else "tail")
             assert out[i] == (lang, p, want), (i, c1, c2)
@@ -233,6 +239,7 @@ def _py_bucket(prefix: str, s: str, b: int) -> int:
 
 
 def _py_dsir_logw(texts: dict[int, str], target_ids: set[int], b: int, alpha: float):
+    """Independent reference: id -> (n_feats, unrounded Σ λ)."""
     feats: dict[int, list[int]] = {}
     for i, t in texts.items():
         toks = t.split(" ")
@@ -252,7 +259,7 @@ def _py_dsir_logw(texts: dict[int, str], target_ids: set[int], b: int, alpha: fl
         - math.log((rb[x] + alpha) / (r_tot + alpha * b))
         for x in range(b)
     ]
-    return {i: (len(fs), round(sum(lam[x] for x in fs), 4)) for i, fs in feats.items()}
+    return {i: (len(fs), sum(lam[x] for x in fs)) for i, fs in feats.items()}
 
 
 def test_dsir_weights_match_python_reference(spark):
@@ -271,7 +278,7 @@ def test_dsir_weights_match_python_reference(spark):
         lmdata.dsir_resample(d, d.filter(F.col("lang") == "en"), quota=0.5),
         "doc_id", "n_feats", "logw",
     )
-    ref = _py_dsir_logw(texts, {0, 2}, 64, 0.5)
+    ref = {i: (n, round(w, 4)) for i, (n, w) in _py_dsir_logw(texts, {0, 2}, 64, 0.5).items()}
     assert out == ref
     # English docs must out-weigh the non-English ones under an en target
     assert min(out[0][1], out[2][1]) > max(out[1][1], out[3][1])
@@ -322,3 +329,88 @@ def test_dsir_plan_broadcasts_lambda_and_partitions_window(spark):
     # (single-partition global sort) must never appear in the plan
     assert "windowspecdefinition(lang" in plan
     assert "windowspecdefinition(gumbel" not in plan
+
+
+# ---------------------------------------------------------------------------
+# rounding-boundary margins of the LM-data oracles
+# ---------------------------------------------------------------------------
+
+_TIE_MARGIN = 1e-9
+
+
+def _boundary_gap(x: float, dp: int) -> float:
+    """Distance from x to the nearest half-way point of the dp-decimal grid."""
+    scaled = x * 10**dp
+    return abs(scaled - math.floor(scaled) - 0.5) / 10**dp
+
+
+def test_lmdata_oracle_values_clear_rounding_boundaries(spark, sf_dir):
+    """Spark and DuckDB agree on the four LM-data queries only because every
+    rounded double sits far from a rounding boundary, where accumulation-
+    order noise (~1e-13) cannot flip the last digit. Recompute each
+    pre-rounding value on the fixture corpus, require a 1e-9 margin, and
+    check the recomputation against the query output, so a data refresh
+    that lands a value on a boundary fails here rather than flaking the
+    correctness sweep."""
+    import pyarrow.parquet as pq
+
+    from beholder_spark.operators.sample import _threshold_hex
+    from beholder_spark.queries import QUERIES
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang"])
+    docs = [r for r in docs.to_pylist() if r["text"] is not None]
+    gaps: list[tuple[str, int, float]] = []
+
+    def rounded(name: str, doc_id: int, x: float, dp: int) -> float:
+        gaps.append((name, doc_id, _boundary_gap(x, dp)))
+        return round(x, dp)
+
+    # lm_perplexity_scores: cross_entropy 4dp, ppl 3dp
+    scored = [r for r in docs if len(r["text"].split(" ")) >= 2]
+    thr = _threshold_hex(0.8)
+    ce_of = _py_bigram_scorer(
+        [r["text"] for r in scored if hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[:8] < thr]
+    )
+    want_ppl = {}
+    for r in scored:
+        n, ce = ce_of(r["text"])
+        i = r["doc_id"]
+        want_ppl[i] = (n, rounded("cross_entropy", i, ce, 4), rounded("ppl", i, math.exp(ce), 3))
+
+    # lm_ppl_bucket_split: per-language tercile cutoffs 4dp over the 3dp ppl
+    lang = {r["doc_id"]: r["lang"] for r in scored}
+    by_lang: dict[str, list[float]] = {}
+    for i, (_, _, p) in want_ppl.items():
+        by_lang.setdefault(lang[i], []).append(p)
+    cuts = {
+        lg: tuple(rounded(f"cut_{lg}", -1, c, 4) for c in _py_tercile_cuts(vals))
+        for lg, vals in by_lang.items()
+    }
+    want_split = {}
+    for i, (_, _, p) in want_ppl.items():
+        c1, c2 = cuts[lang[i]]
+        want_split[i] = (lang[i], p, "head" if p <= c1 else ("middle" if p <= c2 else "tail"))
+
+    # dsir_resample_en: logw 4dp, then gumbel = logw - ln(-ln u) at 4dp
+    texts = {r["doc_id"]: r["text"] for r in docs}
+    en = {r["doc_id"] for r in docs if r["lang"] == "en"}
+    want_dsir = {}
+    for i, (n, w) in _py_dsir_logw(texts, en, 64, 0.5).items():
+        u = (int(hashlib.md5(f"g:{i}".encode()).hexdigest()[:6], 16) + 0.5) / 16**6
+        logw = rounded("logw", i, w, 4)
+        want_dsir[i] = (n, logw, rounded("gumbel", i, logw - math.log(-math.log(u)), 4))
+
+    assert len(gaps) > 3 * len(scored)
+    close = [g for g in gaps if g[2] < _TIE_MARGIN]
+    assert close == [], close
+
+    for name, cols, want in (
+        ("lm_perplexity_scores", ("n_bigrams", "cross_entropy", "ppl"), want_ppl),
+        ("lm_ppl_bucket_split", ("lang", "ppl", "ppl_bucket"), want_split),
+        ("dsir_resample_en", ("n_feats", "logw", "gumbel"), want_dsir),
+    ):
+        assert _by_id(QUERIES[name][0](spark, sf_dir), "doc_id", *cols) == want, name
+
+    # lm_repeated_span_removal rounds nothing: its output is integers and text
+    schema = QUERIES["lm_repeated_span_removal"][0](spark, sf_dir).schema
+    assert {f.dataType.typeName() for f in schema} == {"long", "string"}

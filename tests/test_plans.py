@@ -244,21 +244,14 @@ def test_webtext_guard_fallback_results_identical(spark):
 
 
 def test_warc_and_codec_queries_ride_the_scan_with_zero_exchange(spark, sf_dir):
-    """The r4 ingest/codec queries must stay scan-riding: parquet scan
-    pruned to the parameter columns, fixture Arrow stage, the real
-    parser/codec MapInPandas stage, NO shuffle anywhere."""
+    """WARC ingest must stay scan-riding: parquet scan, fixture Arrow
+    stage, the real parser MapInPandas stage, NO shuffle anywhere."""
     from beholder_spark.queries import QUERIES
 
-    for name in ("parse_warc_records", "multimodal_jpeg_progressive", "multimodal_gif_decode"):
-        df = QUERIES[name][0](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, name
-        assert "MapInPandas" in plan, name
-        # column pruning: the scan never reads the (wide) text column the
-        # query doesn't use — jpeg/gif derive everything from doc_id
-        if name != "parse_warc_records":
-            explained = df._jdf.queryExecution().toString()
-            assert "ReadSchema: struct<doc_id:bigint>" in explained, name
+    df = QUERIES["parse_warc_records"][0](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "MapInPandas" in plan
 
 
 def test_broadcast_guard_remote_scheme_count_path(spark, tmp_path, monkeypatch):

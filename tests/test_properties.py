@@ -151,62 +151,7 @@ def test_fieldpack_unpack_never_crashes(buf):
 
 
 # ---------------------------------------------------------------------------
-# baseline-JPEG codec properties (r4)
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    bx=st.integers(1, 4),
-    by=st.integers(1, 3),
-    base=st.integers(0, 255),
-    step=st.integers(0, 255),
-    ac44=st.integers(0, 5),
-    restart=st.integers(0, 3),
-)
-def test_jpeg_analytic_roundtrip_property(bx, by, base, step, ac44, restart):
-    """Any analytic fixture decodes to the closed-form channel sums:
-    solid DC blocks reconstruct exactly; the F(4,4) checkerboard is
-    sum-neutral whenever no pixel clips (v±ac44 within 0..255)."""
-    from beholder_spark.operators import multimodal as mm
-
-    w, h = 8 * bx, 8 * by
-    vals = [(base + i * step) % 256 for i in range(bx * by)]
-    data = mm.make_jpeg_bytes(w, h, base, step, ac44=ac44, restart_interval=restart)
-    got = mm.decode_jpeg_bytes(data)
-    if ac44 and not all(ac44 <= v <= 255 - ac44 for v in vals):
-        # clipping breaks sum-neutrality; just require a clean decode
-        assert got[:3] == (w, h, "jpeg-baseline") and got[-1] is True
-        return
-    exp = sum(64 * v for v in vals)
-    assert got == (w, h, "jpeg-baseline", exp, exp, exp, True)
-
-
-@settings(max_examples=120, deadline=None)
-@given(st.binary(min_size=0, max_size=400))
-def test_jpeg_decode_never_crashes_on_junk(buf):
-    """Total on arbitrary bytes: junk either fails closed or (if it
-    happens to be a valid stream) decodes — never raises."""
-    from beholder_spark.operators import multimodal as mm
-
-    out = mm.decode_jpeg_bytes(b"\xff\xd8\xff" + buf)
-    assert out[-1] in (True, False)
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.data(), bx=st.integers(1, 3), base=st.integers(0, 255))
-def test_jpeg_truncation_always_fails_closed(data, bx, base):
-    """Every strict prefix of a valid stream (cut inside the entropy
-    data or headers) fails closed — no partial-decode parse_ok=True."""
-    from beholder_spark.operators import multimodal as mm
-
-    full = mm.make_jpeg_bytes(8 * bx, 8, base, 91)
-    cut = data.draw(st.integers(3, len(full) - 3))
-    assert mm.decode_jpeg_bytes(full[:cut])[-1] is False
-
-
-# ---------------------------------------------------------------------------
-# r4 codecs: GIF LZW + WARC grammar (pure-function kernels)
+# GIF LZW + WARC grammar (pure-function kernels)
 # ---------------------------------------------------------------------------
 
 

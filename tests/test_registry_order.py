@@ -1,10 +1,9 @@
-"""Driver-sweep registry-order contract (VERDICT r2 item 1).
+"""Correctness-sweep registry-order contract.
 
 The driver's correctness sweep covers the first 50 entries of
 ``queries()`` in dict order.  These tests pin that the first 50 registered
-queries are all oracle-exact and include every round-2/3 flagship operator
-the round-2 verdict flagged as missing driver coverage, while keeping at
-least one representative of each round-1 operator family.
+queries are all oracle-exact and include every flagship operator and at
+least one representative of each operator family.
 """
 
 from __future__ import annotations
@@ -12,81 +11,58 @@ from __future__ import annotations
 from beholder_spark.queries import _SWEEP_FIRST, _SWEEP_ROWS_ONLY, QUERIES
 
 REQUIRED_FLAGSHIPS = [
+    # temporal joins, duplicate clustering and incremental dedup
     "asof_purchase_attribution",
     "interval_clicks_before_purchase",
     "dedup_dup_clusters",
     "dedup_incremental_new_vs_index",
+    "dedup_fuzzy_pipeline_counts",
+    "dedup_fuzzy_quality_survivors",
+    # web-corpus curation
     "webtext_span_dedup",
     "webtext_pii_redact",
     "curation_pipeline_counts",
     "adaptive_length_filter",
-    # multimodal_decode_meta rotated out (green r3 driver row) for the
-    # new real GIF decoder
-    # round-4 rotation (VERDICT r3 item 7): the real decoders and the new
-    # self-observability query must hold their driver rows
-    "multimodal_bmp_decode",
-    "multimodal_wav_decode",
-    "multimodal_png_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_gif_decode",
-    # late-round real operators take the stub-plumbing trio's slots
-    "multimodal_jpeg_progressive",
-    "multimodal_video_frames",
-    "multimodal_mp3_meta",
-    "config_internal_log_counts",
-    "dedup_fuzzy_pipeline_counts",
-    # round-5 rotation (VERDICT r4 item 2): the four r4 queries whose only
-    # green rows were the judge's independent re-run take the slots of
-    # textstats_tokens / dedup_exact_texts / sample_stratified_langs /
-    # time_between_events (each green in ≥2 prior driver rounds)
+    # webtext ingest: WARC parse, WARC dedup, blocklist
     "parse_warc_records",
     "warc_ingest_dedup_counts",
     "webtext_badwords_blocklist",
-    "dedup_fuzzy_quality_survivors",
-    # round-5 rotation, continued (VERDICT r4 missing-item 2, final round):
-    # every remaining never-driver-swept entry takes a slot from a
-    # four-round-proven one, making the ever-swept union 94/94.  Rotated
-    # out for them (each green in ALL FOUR prior driver rounds, code
-    # untouched in round 5): parse_syslog_roundtrip, set_replace_keep_drop,
-    # distinct_users_by_type, topk_source_per_lang,
-    # dedup_latest_event_per_user, grouping_sets_lang_source,
-    # running_total_per_user, sessionize_user_events,
-    # percentiles_value_by_type.
+    # engine self-observability
+    "config_internal_log_counts",
+    # field rewriting, grouping sets and approximate distinct counts
     "set_date_format",
     "set_basename",
     "cube_lang_source",
     "pivot_type_by_day",
     "approx_distinct_users",
     "textstats_bpe_tokens",
-    "multimodal_frame_sample",
-    "multimodal_resize_plan",
-    "multimodal_feature_stub",
-    # round-5 session-2: the new training-batch-shaping trio
-    # (operators/packing.py) — rotated in for webtext_url_canonicalize /
-    # textstats_script_profile / webtext_repetition (each green in the r3
-    # and r4 driver sweeps)
+    # LM-data curation: perplexity, repeated spans, CCNet split, DSIR
+    "lm_perplexity_scores",
+    "lm_repeated_span_removal",
+    "lm_ppl_bucket_split",
+    "dsir_resample_en",
+    # training-batch shaping
     "pack_sequences_windows",
     "pack_bins_nosplit",
     "mix_token_budget_langs",
 ]
 
-# Round-5 family representatives.  Families whose 4-round-proven rep was
-# rotated out are re-represented by the never-swept entry that replaced it
-# (parse → fieldpack/WARC, field-rewrite → set_date/set_basename,
-# grouping family → cube/pivot, distinct counts → approx_distinct_users).
-# Window/percentile/sessionize reps yielded their slots (green in all four
-# prior driver rounds, code untouched in r5) — those families keep their
-# evidence via prior CORRECTNESS_r0{1..4}.json rows + tools/check_oracle.py.
+# At least one oracle-exact representative per operator family.
 FAMILY_REPS = [
     "flagship_stats_by_type_hour",  # stats counts + time bucketing
-    "parse_fieldpack_roundtrip",  # parse family
+    "parse_syslog_roundtrip",  # parse family: text
+    "parse_fieldpack_roundtrip",  # parse family: binary
     "route_switch_lang",  # routing family
     "config_switch_routed_counts",  # config front end
     "set_date_format",  # field-rewrite family
     "enrich_broadcast_geo",  # lookup enrich
     "anti_orders_without_lineitems",  # semi/anti resume
     "union_sources_counts",  # union
-    "approx_distinct_users",  # distinct counts (HLL twin; exact green r1-r4)
+    "distinct_users_by_type",  # distinct counts
+    "topk_source_per_lang",  # top-k
+    "running_total_per_user",  # windows
+    "sessionize_user_events",  # sessionization
+    "percentiles_value_by_type",  # percentiles
     "cube_lang_source",  # rollup/cube/grouping-sets family
     "salted_join_order_priority",  # skew salting
     "stream_windowed_counts_events",  # streaming
