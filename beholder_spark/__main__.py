@@ -111,18 +111,7 @@ def _run_daemon(spark, p, args) -> int:
     if probe.udp_ingest or probe.tcp_frame_ingest:
         # start the listeners once, from the declared specs; the
         # supervisor's self-sourcing recompiles re-tail the same spools
-        from beholder_spark.sources import TcpSyslogFrameBridge, UdpSpoolBridge
-
-        for spec in probe.udp_ingest:
-            b = UdpSpoolBridge(spec["spool"], port=spec["port"], flush_secs=0.2)
-            b.start()
-            bridges.append(b)
-        for spec in probe.tcp_frame_ingest:
-            b = TcpSyslogFrameBridge(
-                spec["spool"], host=spec["host"], port=spec["port"], flush_secs=0.2
-            )
-            b.start()
-            bridges.append(b)
+        bridges = C.start_ingest_bridges(probe)
         stream_factory = lambda: None  # noqa: E731 — self-sourcing config
         kind = "udp" if probe.udp_ingest else "tcp syslog-frame"
         banner = f"daemon: listening {kind} port {bridges[0].port} → {args.out}"

@@ -860,6 +860,33 @@ def run_config_stream(
     return w.start()
 
 
+def start_ingest_bridges(compiled) -> list:
+    """Start one listener bridge per ingest declaration the compiled
+    config recorded: a :class:`beholder_spark.sources.UdpSpoolBridge` per
+    ``from udp`` and a :class:`beholder_spark.sources.TcpSyslogFrameBridge`
+    per ``from tcp … as syslog-frame``. If a later bridge fails to start,
+    the ones already started are stopped before the error propagates."""
+    from beholder_spark.sources import TcpSyslogFrameBridge, UdpSpoolBridge
+
+    bridges = []
+    try:
+        for spec in compiled.udp_ingest:
+            b = UdpSpoolBridge(spec["spool"], port=spec["port"], flush_secs=0.2)
+            b.start()
+            bridges.append(b)
+        for spec in compiled.tcp_frame_ingest:
+            b = TcpSyslogFrameBridge(
+                spec["spool"], host=spec["host"], port=spec["port"], flush_secs=0.2
+            )
+            b.start()
+            bridges.append(b)
+    except Exception:
+        for b in bridges:
+            b.stop()
+        raise
+    return bridges
+
+
 def run_config_udp_daemon(
     spark: SparkSession,
     config_text: str,
@@ -884,8 +911,6 @@ def run_config_udp_daemon(
     bridges run on edge nodes (or are replaced by Kafka topics); the
     Spark side of the plan is identical either way.
     """
-    from beholder_spark.sources import TcpSyslogFrameBridge, UdpSpoolBridge
-
     compiled = compile_config(config_text)
     compiled(None, spark=spark)  # records the ingest declarations
     if not compiled.udp_ingest and not compiled.tcp_frame_ingest:
@@ -893,18 +918,8 @@ def run_config_udp_daemon(
             "run_config_udp_daemon requires a `from udp <port> spool '<dir>'` "
             "or `from tcp <host> <port> as syslog-frame spool '<dir>'` source"
         )
-    bridges = []
+    bridges = start_ingest_bridges(compiled)
     try:
-        for spec in compiled.udp_ingest:
-            b = UdpSpoolBridge(spec["spool"], port=spec["port"], flush_secs=0.2)
-            b.start()
-            bridges.append(b)
-        for spec in compiled.tcp_frame_ingest:
-            b = TcpSyslogFrameBridge(
-                spec["spool"], host=spec["host"], port=spec["port"], flush_secs=0.2
-            )
-            b.start()
-            bridges.append(b)
         # the self-sourcing streaming runner handles both the single-sink
         # (final frame → manifested `stage`) and the tee fan-out shapes
         q = run_config_stream(

@@ -79,12 +79,6 @@ def rollup_counts(df: DataFrame, *keys: str) -> DataFrame:
     return df.rollup(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
-def running_total(df: DataFrame, partition: str, order: str, value: str, out_col: str = "running") -> DataFrame:
-    """Windowed running sum per entity (ops view: cumulative volume)."""
-    w = Window.partitionBy(partition).orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_col, F.sum(value).over(w))
-
-
 def sessionize(
     df: DataFrame,
     key: str,

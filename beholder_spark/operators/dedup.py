@@ -226,11 +226,6 @@ def simhash(
     return sums.select(F.col(id_col), sim.cast("long").alias(out_col))
 
 
-def simhash16(df: DataFrame, id_col: str, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """16-bit SimHash (compact oracle-demo width; see :func:`simhash`)."""
-    return simhash(df, id_col, text_col, out_col, bits=16)
-
-
 def winnow_overlap_pairs(
     df: DataFrame,
     id_col: str,

@@ -56,15 +56,6 @@ def sample_hash(df: DataFrame, key: str, rate: float) -> DataFrame:
     return df.filter(_key_hash(key) < _threshold_hex(rate))
 
 
-def split_hash(df: DataFrame, key: str, rate: float) -> tuple[DataFrame, DataFrame]:
-    """Deterministic two-way split (e.g. train/holdout): complementary
-    subsets by the same hash — no row in both, none lost (NULL keys ride
-    the sentinel hash, landing together in exactly one side)."""
-    h = _key_hash(key)
-    t = _threshold_hex(rate)
-    return df.filter(h < t), df.filter(~(h < t))
-
-
 def sample_stratified(df: DataFrame, key: str, strata_col: str, rates: dict[str, float], default_rate: float = 0.0) -> DataFrame:
     """Per-stratum deterministic rates (e.g. downsample 'en', keep all
     low-resource langs): the rate map compiles to a CASE WHEN literal —

@@ -42,13 +42,6 @@ def salted_count(df: DataFrame, keys: list[str], salt_from: str, buckets: int = 
     return partial.groupBy(*keys).agg(F.sum("_pn").cast("long").alias("n"))
 
 
-def repartition_salted(df: DataFrame, key: str, salt_from: str, partitions: int, buckets: int = 32) -> DataFrame:
-    """Salted repartition before a wide op: co-locates by (key, salt) so a
-    hot key spreads over `buckets` tasks instead of one."""
-    salted = add_salt(df, salt_from, buckets)
-    return salted.repartition(partitions, F.col(key), F.col("_salt"))
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

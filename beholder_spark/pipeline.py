@@ -44,28 +44,8 @@ def _op_parse_text(df: DataFrame, st: dict) -> DataFrame:
     return out.withColumn("parse_ok", F.col(st.get("dst", "text_out")).isNotNull())
 
 
-def _op_parse_text_dedup(df: DataFrame, st: dict) -> DataFrame:
-    """Payload-dedup parse: extract once per DISTINCT payload, join the
-    result back by payload hash.
-
-    Re-crawl-heavy corpora (Common Crawl) carry the same html under many
-    urls; plain parse pays Python extraction per ROW, this variant pays
-    per distinct PAYLOAD + two shuffles of (32-byte hash, text). Worth it
-    when dup_rate × extract_cost > shuffle cost — measure (bench reports
-    both). Byte-identical to the plain path by construction (same UDF on
-    the same bytes; NULL payloads ride a sentinel hash so they join back).
-    """
-    src, dst = st["src"], st.get("dst", "text_out")
-    hashed = df.withColumn("_ph", F.coalesce(F.md5(F.col(src)), F.lit("__NULL__")))
-    distinct = hashed.select("_ph", src).dropDuplicates(["_ph"])
-    extracted = distinct.withColumn(dst, extract_text_udf(F.col(src))).select("_ph", dst)
-    out = hashed.join(extracted, "_ph").drop("_ph")
-    return out.withColumn("parse_ok", F.col(dst).isNotNull())
-
-
 OPS = {
     "parse_text": _op_parse_text,
-    "parse_text_dedup": _op_parse_text_dedup,
     "set_host": lambda df, st: fo.set_host_from_url(df, st.get("field", "host"), st.get("url_col", "url")),
     "set": lambda df, st: fo.set_template(df, st["field"], st["template"], *st["cols"]),
     "set_replace": lambda df, st: fo.set_replace(df, st["field"], st["pattern"], st["replacement"], st.get("src")),
@@ -86,7 +66,7 @@ _ROW_OPS = {"drop_when", "filter"}
 
 def _stage_outputs(st: dict) -> set[str]:
     op = st["op"]
-    if op in ("parse_text", "parse_text_dedup"):
+    if op == "parse_text":
         return {st.get("dst", "text_out"), "parse_ok"}
     if op == "set_host":
         return {st.get("field", "host")}
@@ -105,7 +85,7 @@ def _stage_deps(st: dict) -> set[str] | None:
     if "deps" in st:
         return set(st["deps"])
     op = st["op"]
-    if op in ("parse_text", "parse_text_dedup"):
+    if op == "parse_text":
         return {st["src"]}
     if op == "set_host":
         return {st.get("url_col", "url")}
@@ -197,9 +177,9 @@ def default_routes() -> list:
     ]
 
 
-def pages_spec(lookup: DataFrame, dedup_parse: bool = False) -> list[dict[str, Any]]:
+def pages_spec(lookup: DataFrame) -> list[dict[str, Any]]:
     return [
-        {"op": "parse_text_dedup" if dedup_parse else "parse_text", "src": "html", "dst": "text_out"},
+        {"op": "parse_text", "src": "html", "dst": "text_out"},
         {"op": "set_host", "url_col": "url"},
         {"op": "enrich", "lookup": lookup, "on": "host"},
         # deps declared so prune_spec can reason about the opaque case
@@ -259,15 +239,16 @@ def run_pages_pipeline(
     lookup_path: str,
     out_root: str,
     checkpoint: bool = True,
-    dedup_parse: bool = False,
 ) -> dict[str, DataFrame]:
     """Full parse→enrich→route→aggregate over the pages table.
 
     Scale shape: the parse+enrich+route chain is ONE narrow pass (pandas
     UDF + broadcast join + codegen'd projections — zero shuffles); the
     fan-out is ONE partitionBy(route, day) write; aggregates shuffle only
-    (host, lang, bucket) partial counts. Skewed hosts are pre-salted via
-    AQE + the salted aggregate path in bench.
+    (route, host, lang, bucket) partial counts. The aggregate is a plain
+    groupBy count, not salted: map-side partial aggregation sends each
+    reducer at most one row per key per input task, so a hot host costs
+    its reducer one partial row per task, not one row per page.
     """
     from beholder_spark.session import ship_package
 
@@ -292,7 +273,7 @@ def run_pages_pipeline(
             )
             pages = pages.filter(~day_key.isin(*done))
 
-    routed = compile_pipeline(pages, pages_spec(lookup, dedup_parse=dedup_parse))
+    routed = compile_pipeline(pages, pages_spec(lookup))
     routed = routed.withColumn("day", F.to_date(F.col("warc_ts")))
 
     # Sink hygiene at 100 TB: the routed table carries the pipeline's

@@ -1371,15 +1371,6 @@ def _minhash_sql(k: int = 8, bands: int = 4, cap: int | None = None) -> str:
     """
 
 
-@_register("dedup_minhash_lsh", _minhash_sql())
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates: shingle→minhash→band→bucket-join.
-    All hashing is md5-derived so the oracle reproduces signatures exactly.
-    The default per-bucket cap (10k) is a deliberate no-op at oracle scale
-    — the CAPPED skew path is oracle-checked by dedup_minhash_lsh_capped."""
-    return dd.minhash_candidate_pairs(_corpus(spark, sf_dir), "doc_id", "text", shingle_n=3)
-
-
 @_register("dedup_minhash_lsh_capped", _minhash_sql(cap=2))
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-bounded LSH path with a BINDING cap (max_bucket_size=2):
@@ -1450,7 +1441,7 @@ def dedup_ngram_jaccard_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_sql(bits: int) -> str:
     sums = ",\n             ".join(
         f"sum(2 * (((strpos('0123456789abcdef', substr(md5(tok), {j // 4 + 1}, 1)) - 1)"
         f" >> {3 - j % 4}) & 1) - 1) AS s{j}"
@@ -1462,12 +1453,6 @@ def _simhash_sql(bits: int = 16) -> str:
     sums AS (SELECT doc_id, {sums} FROM toks GROUP BY doc_id)
     SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash FROM sums
     """
-
-
-@_register("dedup_simhash16", _simhash_sql())
-def dedup_simhash16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash per document (md5-nibble bit sampling)."""
-    return dd.simhash16(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_register("dedup_simhash48", _simhash_sql(bits=48))

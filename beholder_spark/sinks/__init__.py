@@ -184,12 +184,6 @@ def send_partition_to_shell(command: str, line_col: str):
     return send
 
 
-def write_shell(df: DataFrame, command: str, line_col: str = "payload") -> None:
-    """K4 batch form: run the shell sink over every partition (parallel
-    executor-side subprocesses, zero driver-side data movement)."""
-    df.foreachPartition(send_partition_to_shell(command, line_col))
-
-
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
     """K2 ``to file <tpl>``: field-templated path ≡ partition columns.
 

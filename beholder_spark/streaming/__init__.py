@@ -85,13 +85,6 @@ def run_stream_once(
     q.awaitTermination()
 
 
-def dedup_within_watermark(stream: DataFrame, keys: list[str], ts_col: str, watermark: str = "2 hours") -> DataFrame:
-    """Streaming dedup: dropDuplicatesWithinWatermark bounds dedup state
-    to the watermark horizon (exact dedup over an unbounded stream would
-    need unbounded state)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def session_windows(
     stream: DataFrame,
     key: str,

@@ -2,8 +2,8 @@
 
 Default mode: run the headline workload at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print
-TWO JSON lines — the full record (per-query min/median/runs + calibration
-brackets, also persisted to ``BENCH/bench_last_full.json``) first, then a
+TWO JSON lines — the full record (per-query min/median/runs, also
+persisted to ``BENCH/bench_last_full.json``) first, then a
 compact headline as the FINAL stdout line::
 
     {"metric": "...", "value": <docs/sec>, "unit": "docs/sec",
@@ -32,73 +32,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# Host-noise calibration reference (VERDICT r2 item 6). Fixed work whose
-# best-case cost on THIS sandbox host is pinned below; the ratio of a
-# run's measured cost to the reference separates engine regressions from
-# environment drift.
-#
-# Probe choice matters: the CPU loop is flat on this VM (0.27-0.49s
-# across contention states) and a raw memory-bandwidth probe is
-# HYPERSENSITIVE (0.76s idle -> 85s contended for identical 4GB copies,
-# 2026-08-17 — a 113x swing while the actual pipeline in the same window
-# ran fine), so neither is a valid multiplier. The normalization
-# denominator is instead a MINIATURE OF THE WORKLOAD'S NOISY PHASE: a
-# fixed 200k-line syslog-parse job through the Arrow/pandas-UDF path
-# (JVM-generated input, noop sink) — exactly the layer the repo's noise
-# forensics isolated as the swing source. cpu/membw stay as diagnostics.
-# spark_parse_sec pinned 2026-08-17 (r3): min of 6 warm local[32] samples
-# [7.47, 1.14, 0.93, 0.90, 0.63, 0.70] — the 12x first-sample spread in
-# ONE JVM is the documented noise; the min is the host's capability.
-CALIB_REF = {"cpu_sec": 0.27, "membw_sec": 0.095, "spark_parse_sec": 0.634}
-
-
-def calibrate() -> dict:
-    """Diagnostic sample: pure-Python CPU loop + numpy copy probe
-    (2 × 128 MB copies = 512 MB of traffic — kept small so a contended
-    host doesn't spend minutes in the probe itself; the 4 GB variant
-    measured 85 s/sample under contention). Not the normalizer — see
-    CALIB_REF."""
-    import numpy as np
-
-    t0 = time.monotonic()
-    x = 0
-    for i in range(5_000_000):
-        x += i * i
-    cpu = time.monotonic() - t0
-    a = np.ones(16_000_000, dtype=np.float64)
-    t0 = time.monotonic()
-    for _ in range(2):
-        b = a.copy()
-        a[0] = b[1]
-    mem = time.monotonic() - t0
-    return {"cpu_sec": round(cpu, 3), "membw_sec": round(mem, 3)}
-
-
-def calibrate_spark(spark) -> float:
-    """Workload-shaped calibration: parse 200k synthetic syslog lines
-    through the Arrow pandas-UDF path to a noop sink. Input is generated
-    JVM-side (format_string over spark.range — no Python in the gen), so
-    the timed work is scan→Arrow IPC→Python regex→Arrow back→noop: the
-    exact phase the host noise hits."""
-    from beholder_spark.operators import parse as po
-    from pyspark.sql import functions as F
-
-    lines = spark.range(200_000).select(
-        F.format_string(
-            "<%d>1 2026-01-01T00:00:00Z host%d prog%d - - - calibration message %d",
-            (F.col("id") % 190).cast("int"),
-            (F.col("id") % 50).cast("int"),
-            (F.col("id") % 7).cast("int"),
-            F.col("id"),
-        ).alias("payload")
-    )
-    t0 = time.monotonic()
-    po.parse_syslog(lines, col="payload", keep_unparsed=True).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    return round(time.monotonic() - t0, 3)
-
 
 BENCH_BASE_ROWS = int(os.environ.get("BENCH_BASE_ROWS", "120000"))
 BENCH_REPLICATION = int(os.environ.get("BENCH_REPLICATION", "72"))
@@ -157,9 +90,7 @@ def ensure_bench_tables(spark=None) -> tuple[str, str]:
     return PAGES_CACHE, LOOKUP_CACHE
 
 
-def run_pipeline_once(
-    spark, pages_path: str, lookup_path: str, dedup_parse: bool = False
-) -> tuple[float, int]:
+def run_pipeline_once(spark, pages_path: str, lookup_path: str) -> tuple[float, int]:
     """One full parse→enrich→route→aggregate pass; returns (sec, docs).
 
     Benchmark hygiene for the VM's shared virtio disk: drain dirty-page
@@ -173,9 +104,7 @@ def run_pipeline_once(
     n = spark.read.parquet(pages_path).count()  # also warms the page cache
     subprocess.run(["sync"], check=False)
     t0 = time.monotonic()
-    run_pages_pipeline(
-        spark, pages_path, lookup_path, out, checkpoint=False, dedup_parse=dedup_parse
-    )
+    run_pages_pipeline(spark, pages_path, lookup_path, out, checkpoint=False)
     return time.monotonic() - t0, n
 
 
@@ -185,13 +114,11 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
     Each query is timed ``BENCH_QUERY_RUNS`` times (min-of-N — the same
     protocol as the headline; single-run per-query numbers proved
     uninterpretable under the host's 3-6× noise: r3 drew fingerprint_dups
-    at 16.2s vs 1.55s r2 with zero code change). Query run-sets are
-    bracketed by ``calibrate_spark`` samples so each number carries its
-    own contention evidence (``calib_bracket``, smaller adjacent sample).
+    at 16.2s vs 1.55s r2 with zero code change).
 
     Returns ``(times, detail)``: ``times`` is the driver-contract
-    name→min_sec scalar dict; ``detail`` adds {min, median, runs,
-    calib_bracket, slowdown} per query.
+    name→min_sec scalar dict; ``detail`` adds {min, median, runs} per
+    query.
     """
     from beholder_spark.queries import QUERIES
 
@@ -205,8 +132,8 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
         "top_orders_by_revenue",
         "salted_count_by_type",
         "dedup_latest_event_per_user",
-        "dedup_minhash_lsh",
-        "dedup_simhash16",
+        "dedup_minhash_lsh_capped",
+        "dedup_simhash48",
         "embed_cosine_topk",
         "textstats_quality",
         "lang_id_confusion",
@@ -233,10 +160,8 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
         "lm_ppl_bucket_split",
     ]
     runs_per = int(os.environ.get("BENCH_QUERY_RUNS", "3"))
-    ref = CALIB_REF["spark_parse_sec"]
     times: dict[str, float] = {}
     detail: dict[str, dict] = {}
-    calib_prev = calibrate_spark(spark)
     for name in names:
         fn, _sql = QUERIES[name]
         samples = []
@@ -244,18 +169,9 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
             t0 = time.monotonic()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             samples.append(round(time.monotonic() - t0, 3))
-        calib_next = calibrate_spark(spark)
-        bracket = round(min(calib_prev, calib_next), 3)
         ss = sorted(samples)
         times[name] = ss[0]
-        detail[name] = {
-            "min": ss[0],
-            "median": ss[len(ss) // 2],
-            "runs": samples,
-            "calib_bracket": bracket,
-            "slowdown": round(bracket / ref, 3),
-        }
-        calib_prev = calib_next
+        detail[name] = {"min": ss[0], "median": ss[len(ss) // 2], "runs": samples}
     return times, detail
 
 
@@ -271,8 +187,7 @@ def format_output_lines(full: dict) -> list[str]:
     compact = {
         k: full.get(k)
         for k in (
-            "metric", "value", "unit", "value_noise_normalized",
-            "host_slowdown", "pipeline_sec", "pipeline_docs", "sf",
+            "metric", "value", "unit", "pipeline_sec", "pipeline_docs", "sf",
         )
     }
     compact["detail"] = "BENCH/bench_last_full.json"
@@ -299,88 +214,28 @@ def main_bench() -> None:
     # JVM — BENCH/BASELINE.md noise section); the min is the engine's
     # capability, and a single-run headline is a lottery ticket.
     runs = int(os.environ.get("BENCH_PIPELINE_RUNS", "3"))
-    calib_samples = [calibrate()]
     run_pipeline_once(spark, pages_path, lookup_path)
-    # workload-shaped calibration needs warm UDF workers → sample after
-    # the warm-up run, between timed runs, and at the end; min-of-samples
-    # pairs with the min-of-N pipeline headline (both estimate the least-
-    # contended window of this invocation)
-    spark_calib = [calibrate_spark(spark)]
-    calib_samples.append(calibrate())
-    timed = []
-    for _ in range(runs):
-        timed.append(run_pipeline_once(spark, pages_path, lookup_path))
-        spark_calib.append(calibrate_spark(spark))
-    calib_samples.append(calibrate())
+    timed = [run_pipeline_once(spark, pages_path, lookup_path) for _ in range(runs)]
     docs = timed[0][1]
     secs = sorted(round(s, 2) for s, _ in timed)
     sec = secs[0]
-    # payload-dedup parse variant (extract once per distinct html — the
-    # re-crawl-heavy-corpus optimization; reported alongside, not as the
-    # headline, because its win scales with the input's duplicate rate)
-    dd_sec, _ = run_pipeline_once(spark, pages_path, lookup_path, dedup_parse=True)
     qtimes, qdetail = run_queries(spark, sf_dir)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # noise-normalized headline: best calibration sample ÷ pinned
-    # reference = how much slower the host is THIS draw than the host
-    # that recorded the baseline; credit the engine for the difference.
-    # min-of-N pipeline runs pair with min-of-samples calibration: both
-    # estimate the least-contended window of the invocation.
-    best_membw = min(c["membw_sec"] for c in calib_samples)
-    best_cpu = min(c["cpu_sec"] for c in calib_samples)
-    best_spark_calib = min(spark_calib)
-    ref = CALIB_REF["spark_parse_sec"]
-    # SYMMETRIC slowdown (no >=1.0 clamp): a faster-than-reference host
-    # deflates the normalized number just as a slower one inflates it —
-    # otherwise the normalization is structurally upward-biased (the raw
-    # headline stays primary either way)
-    host_slowdown = round(best_spark_calib / ref, 3) if ref else None
-    # PER-RUN normalization: contention fluctuates at seconds scale, so a
-    # global min-of-samples can catch a calm gap no 90s pipeline run fits
-    # into (measured: calib 0.86s best sample while every run held ~94s
-    # under sustained contention whose adjacent samples read 1.9-7.2s).
-    # Each run is bracketed by the samples before/after it; its slowdown
-    # is the smaller bracket (conservative), and the headline normalized
-    # value is the best per-run estimate.
-    per_run_norm = []
-    for i, (s, _) in enumerate(timed):
-        bracket = min(spark_calib[i], spark_calib[i + 1])
-        sl = (bracket / ref) if ref else 1.0  # symmetric — see host_slowdown
-        per_run_norm.append(round(sl * docs / s, 1))
-    norm_sorted = sorted(per_run_norm)
     full = {
         "metric": "e2e parse→enrich→route→aggregate throughput",
         "value": round(docs / sec, 1),
         "unit": "docs/sec",
-        # median per-run normalized is the honest central estimate;
-        # best is reported alongside, never as the headline
-        "value_noise_normalized": (
-            norm_sorted[len(norm_sorted) // 2] if norm_sorted else None
-        ),
-        "value_noise_normalized_best": max(per_run_norm) if per_run_norm else None,
-        "value_noise_normalized_per_run": per_run_norm,
-        "host_slowdown": host_slowdown,
-        "calib_spark_parse_samples": spark_calib,
-        "calib_samples": calib_samples,
-        "calib_best": {
-            "cpu_sec": best_cpu,
-            "membw_sec": best_membw,
-            "spark_parse_sec": best_spark_calib,
-        },
-        "calib_ref": CALIB_REF,
         "pipeline_sec": round(sec, 2),
         "pipeline_runs_sec": secs,
         "pipeline_docs": docs,
-        "dedup_parse_sec": round(dd_sec, 2),
-        "dedup_parse_docs_per_sec": round(docs / dd_sec, 1),
         "queries": qtimes,
         "queries_detail": qdetail,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # Full record: first stdout line + durable file. The driver tail-captures
     # only the LAST 2000 chars of stdout, and the r4 full record (per-query
-    # min/median/runs/calib tables) outgrew that window → BENCH_r04.json
+    # min/median/runs tables) outgrew that window → BENCH_r04.json
     # "parsed": null. So the full record goes FIRST (plus BENCH/ on disk) and
     # the very last line is a compact headline the tail window always fits.
     for line in format_output_lines(full):
@@ -404,11 +259,7 @@ def main_scaling_child(cores: int) -> None:
     spark = get_spark(f"scaling-{cores}", master=f"local[{cores}]", shuffle_partitions=cores)
     pages_path, lookup_path = ensure_bench_tables(spark)
     run_pipeline_once(spark, pages_path, lookup_path)  # warm-up
-    runs = []
-    calib = [calibrate_spark(spark)]
-    for _ in range(SCALING_RUNS):
-        runs.append(run_pipeline_once(spark, pages_path, lookup_path))
-        calib.append(calibrate_spark(spark))
+    runs = [run_pipeline_once(spark, pages_path, lookup_path) for _ in range(SCALING_RUNS)]
     secs = sorted(round(s, 2) for s, _ in runs)
     docs = runs[0][1]
     print(
@@ -419,10 +270,6 @@ def main_scaling_child(cores: int) -> None:
                 "median_sec": secs[len(secs) // 2],
                 "docs": docs,
                 "runs_sec": secs,
-                # contention forensics: parse-shaped calibration bracketing
-                # each run (see CALIB_REF) — lets a reader tell an engine
-                # scaling loss from a host-interference window
-                "calib_parse_sec": calib,
             }
         )
     )
@@ -493,8 +340,6 @@ def main_scaling() -> None:
                 "scaling_efficiency_best": eff_min,
                 f"runs_sec_local{n}": results[n]["runs_sec"],
                 f"runs_sec_local{n4}": results[n4]["runs_sec"],
-                f"calib_parse_sec_local{n}": results[n].get("calib_parse_sec"),
-                f"calib_parse_sec_local{n4}": results[n4].get("calib_parse_sec"),
                 # the contract criterion (BASELINE.json) is graded on the
                 # MEDIAN; best-run efficiency is forensic evidence only
                 "pass": eff_median >= 0.8,

@@ -15,17 +15,12 @@ def _full(n_queries: int, name_len: int = 30) -> dict:
         "metric": "e2e parse→enrich→route→aggregate throughput",
         "value": 464017.3,
         "unit": "docs/sec",
-        "value_noise_normalized": 329273.1,
-        "value_noise_normalized_per_run": [1.0] * 3,
-        "host_slowdown": 2.091,
-        "calib_spark_parse_samples": [0.6] * 5,
-        "calib_samples": [{"cpu_sec": 0.3, "membw_sec": 0.1}] * 3,
         "pipeline_sec": 18.62,
         "pipeline_runs_sec": [18.62, 20.1, 23.4],
         "pipeline_docs": 8_640_000,
         "queries": qtimes,
         "queries_detail": {
-            k: {"min": v, "median": v, "runs": [v] * 3, "calib_bracket": 0.4}
+            k: {"min": v, "median": v, "runs": [v] * 3}
             for k, v in qtimes.items()
         },
         "sf": 0.1,

@@ -643,15 +643,13 @@ def test_config_to_shell_sink(spark, tmp_path):
 
 
 def test_write_shell_parallel_partitions(spark, tmp_path):
-    """K4 batch form: one subprocess per partition in parallel ($$ gives
-    each a distinct output file); the union of outputs is exactly the
-    input rows."""
-    from beholder_spark import sinks as sk
-
+    """K4 `to shell` over a multi-partition frame: one subprocess per
+    partition in parallel ($$ gives each a distinct output file); the
+    union of outputs is exactly the input rows."""
     d = tmp_path / "parts"
     d.mkdir()
     df = spark.createDataFrame([(f"r{i}",) for i in range(100)], ["payload"]).repartition(4)
-    sk.write_shell(df, f"cat > {d}/out.$$")
+    C.run_config_pipeline(spark, df, f"to shell 'cat > {d}/out.$$';", str(tmp_path / "o"))
     got = sorted(ln for f in d.iterdir() for ln in f.read_text().splitlines())
     assert got == sorted(f"r{i}" for i in range(100))
 

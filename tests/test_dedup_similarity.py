@@ -36,7 +36,7 @@ def test_ngram_jaccard_values(spark):
 
 
 def test_simhash_near_dups_close(spark):
-    sh = {r.doc_id: r.simhash for r in dedup.simhash16(_docs(spark), "doc_id", "text").collect()}
+    sh = {r.doc_id: r.simhash for r in dedup.simhash(_docs(spark), "doc_id", "text", bits=16).collect()}
     ham_dup = bin(sh[1] ^ sh[2]).count("1")
     ham_diff = bin(sh[1] ^ sh[3]).count("1")
     assert sh[1] == sh[4]  # exact dup → identical simhash
@@ -88,7 +88,7 @@ def test_dedup_latest_deterministic(spark):
 
 
 def test_sample_hash_deterministic_nested_and_split(spark):
-    from beholder_spark.operators.sample import sample_hash, split_hash
+    from beholder_spark.operators.sample import sample_hash
 
     df = spark.range(5000).withColumnRenamed("id", "k")
     s10 = {r.k for r in sample_hash(df, "k", 0.1).collect()}
@@ -97,23 +97,10 @@ def test_sample_hash_deterministic_nested_and_split(spark):
     assert s10 <= s20  # nested brackets from the same hash
     assert 0.05 < len(s10) / 5000 < 0.15 and 0.15 < len(s20) / 5000 < 0.25
 
-    train, hold = split_hash(df, "k", 0.8)
-    a = {r.k for r in train.collect()}
-    b = {r.k for r in hold.collect()}
-    assert a.isdisjoint(b) and len(a) + len(b) == 5000  # no row lost or doubled
-
-
-def test_split_hash_null_keys_land_in_exactly_one_side(spark):
-    """NULL keys hash under the sentinel — a NULL-keyed row must land in
-    exactly ONE side of a split (never both, never neither)."""
-    from beholder_spark.operators.sample import sample_hash, split_hash
-
-    df = spark.createDataFrame([(None,), ("a",), ("b",)], ["k"])
-    train, hold = split_hash(df, "k", 0.5)
-    n_train, n_hold = train.count(), hold.count()
-    assert n_train + n_hold == 3  # none lost
-    # and at rate=1.0 every row (incl. NULL key) is kept
-    assert sample_hash(df, "k", 1.0).count() == 3
+    # NULL keys hash under the sentinel: at rate=1.0 every row (incl. the
+    # NULL key) is kept
+    nulls = spark.createDataFrame([(None,), ("a",), ("b",)], ["k"])
+    assert sample_hash(nulls, "k", 1.0).count() == 3
 
 
 def test_minhash_bucket_cap_bounds_boilerplate_pairs(spark):
@@ -157,8 +144,8 @@ def test_jaccard_stop_shingle_filter_bounds_hot_join(spark):
 
 def test_simhash_width_parameter(spark):
     """simhash(bits=48) produces values beyond the 16-bit range and the
-    same low-16-bit structure as simhash16 is NOT required (independent
-    bits) — but determinism across calls is."""
+    same low-16-bit structure as simhash(bits=16) is NOT required
+    (independent bits) — but determinism across calls is."""
     df = _docs(spark)
     a = {r.doc_id: r.simhash for r in dedup.simhash(df, "doc_id", "text", bits=48).collect()}
     b = {r.doc_id: r.simhash for r in dedup.simhash(df, "doc_id", "text", bits=48).collect()}

@@ -116,21 +116,6 @@ def test_lineage_metrics(pipeline_out, spark):
     assert len(manifest) == row.n_partitions
 
 
-def test_parse_text_dedup_equals_plain(spark, fixture_dir):
-    """The payload-dedup parse variant is byte-identical to the plain
-    per-row parse, including NULL and empty payloads."""
-    from beholder_spark.pipeline import compile_pipeline
-
-    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
-    plain = compile_pipeline(pages, [{"op": "parse_text", "src": "html"}])
-    dedup = compile_pipeline(pages, [{"op": "parse_text_dedup", "src": "html"}])
-    key = ["url", "warc_ts"]
-    a = plain.select(*key, "text_out", "parse_ok").toPandas().sort_values(key).reset_index(drop=True)
-    b = dedup.select(*key, "text_out", "parse_ok").toPandas().sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b) == pages.count()
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_resume_null_day_rows_exactly_once(spark, tmp_path):
     """Rows with NULL warc_ts land in the default partition, are tracked
     under the manifest's sentinel key, and are neither silently dropped

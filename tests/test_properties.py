@@ -151,34 +151,8 @@ def test_fieldpack_unpack_never_crashes(buf):
 
 
 # ---------------------------------------------------------------------------
-# GIF LZW + WARC grammar (pure-function kernels)
+# WARC grammar (pure-function kernels)
 # ---------------------------------------------------------------------------
-
-
-@settings(max_examples=150, deadline=None)
-@given(
-    st.binary(min_size=1, max_size=400),
-    st.integers(min_value=2, max_value=8),
-)
-def test_gif_lzw_literal_encode_decode_roundtrip(raw, mcs):
-    """The literal-code encoder and the general LZW decoder agree for
-    every index stream whose values fit the code size."""
-    from beholder_spark.operators import multimodal as mm
-
-    indices = bytes(b % (1 << mcs) for b in raw)
-    stream = mm._gif_lzw_encode_literals(indices, mcs)
-    assert mm._gif_lzw_decode(stream, mcs, len(indices)) == indices
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.binary(max_size=300), st.integers(min_value=2, max_value=8), st.integers(min_value=1, max_value=64))
-def test_gif_lzw_decode_total_on_junk(data, mcs, n_pixels):
-    """Arbitrary bytes either decode to exactly n_pixels indices or
-    return None — never raise, never over/under-produce."""
-    from beholder_spark.operators import multimodal as mm
-
-    out = mm._gif_lzw_decode(data, mcs, n_pixels)
-    assert out is None or len(out) == n_pixels
 
 
 @settings(max_examples=100, deadline=None)
@@ -222,14 +196,3 @@ def test_warc_segment_rows_total_on_junk(data):
     rows = P._warc_segment_rows(3, data)
     assert len(rows) >= 1
     assert all(r[0] == 3 for r in rows)
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.binary(max_size=300))
-def test_mp3_and_image_decoders_total_on_junk(data):
-    """decode_image_bytes / parse_mp3_meta_bytes are total over arbitrary
-    bytes: a tuple comes back, never an exception."""
-    from beholder_spark.operators import multimodal as mm
-
-    assert len(mm.decode_image_bytes(data)) == 7
-    assert len(mm.parse_mp3_meta_bytes(data)) == 5
