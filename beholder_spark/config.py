@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beholder_spark import sinks as sk
 from beholder_spark.operators import fields as fo
 from beholder_spark.operators import parse as po
 
@@ -680,11 +681,12 @@ def run_config_pipeline(
     from the DataFrame captured at its `to file` command; field-templated
     paths ≡ partition columns of that write (SURVEY.md §2.6 K2).
 
-    Multi-sink economics: the input is persisted once so the K sink
-    writes recompute only their (cheap, column-level) transform suffixes
-    from cached rows, not K scans of the source — the filtered-branch
-    strategy of SURVEY.md §4.2. When all sinks share one schema, prefer
-    a single `partitionBy(route)` write (sinks.write_fanout_single_pass).
+    Multi-sink economics: the source is persisted once so the K sink
+    writes recompute only their transform suffixes from cached rows, not
+    K scans of the source — the filtered-branch strategy of SURVEY.md
+    §4.2. Each file sink is one :func:`sinks.write_table` call,
+    clustered by its path fields: one file per directory, not one per
+    task × directory.
 
     ``df=None`` lets a self-sourcing config (top-level ``from parquet
     '<path>'`` / ``from text '<path>'``) name its own scan — the whole
@@ -695,8 +697,6 @@ def run_config_pipeline(
     resolution — unknown columns/functions fail here), but nothing is
     executed or written; returns the lazy per-sink DataFrames.
     """
-    import os
-
     compiled = compile_config(config_text)
     if df is None:
         final = compiled(None, spark=spark)  # self-sourcing config
@@ -731,35 +731,27 @@ def run_config_pipeline(
                 continue
             if sink.get("kind") == "shell":
                 # K4: executor-side subprocess per partition
-                from beholder_spark import sinks as _sk
-
                 slice_df.foreachPartition(
-                    _sk.send_partition_to_shell(sink["command"], "payload")
+                    sk.send_partition_to_shell(sink["command"], "payload")
                 )
                 results[f"sink_{i}"] = slice_df
                 continue
             if sink.get("kind") in ("tcp", "udp"):
                 # K3 live network sinks: executor-side senders, one
                 # connection/socket per partition (never via the driver)
-                from beholder_spark import sinks as _sk
-
                 mk = (
-                    _sk.send_partition_to_socket
+                    sk.send_partition_to_socket
                     if sink["kind"] == "tcp"
-                    else _sk.send_partition_to_udp
+                    else sk.send_partition_to_udp
                 )
                 slice_df.foreachPartition(mk(sink["host"], sink["port"], "payload"))
                 results[f"sink_{i}"] = slice_df
                 continue
             part_cols = [f for f in sink["partition_fields"] if f in slice_df.columns]
             path = os.path.join(out_root, f"sink_{i}")
-            w = slice_df.write.mode("overwrite")
-            if sink.get("max_records_per_file"):
-                # `buffer N` (K5): bound rows per output file
-                w = w.option("maxRecordsPerFile", sink["max_records_per_file"])
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(path)
+            sk.write_table(
+                slice_df, path, part_cols, max_records_per_file=sink.get("max_records_per_file")
+            )
             results[f"sink_{i}"] = spark.read.parquet(path)
         return results
     finally:

@@ -300,8 +300,10 @@ def dsir_log_ratios(
     )
     t = target_feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("t_b"))
     r = raw_feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("r_b"))
-    tot_t = target_feats.agg(F.count(F.lit(1)).alias("t_tot"))
-    tot_r = raw_feats.agg(F.count(F.lit(1)).alias("r_tot"))
+    # totals from the ≤B-row bucket tables, not two more full passes;
+    # integer counts, so the sums are exact (coalesce: an empty side is 0)
+    tot_t = t.agg(F.coalesce(F.sum("t_b"), F.lit(0)).alias("t_tot"))
+    tot_r = r.agg(F.coalesce(F.sum("r_b"), F.lit(0)).alias("r_tot"))
     ab = alpha * n_buckets
     return (
         spine.join(t, "bucket", "left")
@@ -347,14 +349,10 @@ def dsir_resample(
     table → per-doc sum → one windowed rank per stratum. The only wide
     exchanges key on doc id and stratum.
     """
-    lam = dsir_log_ratios(
-        dsir_features(target, id_col, text_col, n_buckets),
-        dsir_features(df, id_col, text_col, n_buckets),
-        n_buckets,
-    )
+    feats = dsir_features(df, id_col, text_col, n_buckets)
+    lam = dsir_log_ratios(dsir_features(target, id_col, text_col, n_buckets), feats, n_buckets)
     weights = (
-        dsir_features(df, id_col, text_col, n_buckets)
-        .join(F.broadcast(lam), "bucket")
+        feats.join(F.broadcast(lam), "bucket")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_feats"),

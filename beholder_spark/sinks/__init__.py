@@ -184,15 +184,29 @@ def send_partition_to_shell(command: str, line_col: str):
     return send
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
+def write_table(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    mode: str = "overwrite",
+    max_records_per_file: int | None = None,
+) -> None:
     """K2 ``to file <tpl>``: field-templated path ≡ partition columns.
 
-    One pass over the data produces every per-sink directory — this is the
-    single-pass multi-sink fan-out strategy (SURVEY.md §4.2): at 100 TB,
-    re-scanning the parent once per sink is the difference between 1× and
-    K× input IO.
+    A partitioned write is first clustered by its partition columns with
+    a ``REBALANCE`` hint (one shuffle), so each directory is written by
+    one task: one file per directory instead of one per task × directory.
+    At scale AQE splits a skewed key's partition into several tasks near
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and merges small
+    ones; Spark ignores the hint when AQE is off (``get_spark`` turns it
+    on). ``max_records_per_file`` (``buffer N``, K5) still bounds the
+    rows per file. An unpartitioned write keeps its input partitioning.
     """
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     w = df.write.mode(mode).format(SINK_FORMAT)
+    if max_records_per_file:
+        w = w.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
@@ -200,7 +214,7 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
 
 def write_fanout_single_pass(df: DataFrame, base_path: str, route_col: str = "route") -> None:
     """R1 strategy (i): one ``partitionBy(route)`` write = one scan, one
-    job, N sink directories ``{base_path}/{route_col}={value}/``.
+    shuffle, N sink directories ``{base_path}/{route_col}={value}/``.
 
     Preferred over per-sink filtered writes when sinks share a schema;
     use :func:`write_fanout_branches` when per-sink schemas diverge.

@@ -323,6 +323,113 @@ def test_config_buffer_bounds_rows_per_file(spark, tmp_path):
     assert len(glob.glob(str(tmp_path / "o2" / "sink_0" / "part-*.parquet"))) == 1
 
 
+def _part_files(root) -> dict[str, list[str]]:
+    """Leaf directory (relative to ``root``) → its ``part-*`` files."""
+    import os
+
+    out: dict[str, list[str]] = {}
+    for d, _, names in os.walk(root):
+        parts = sorted(os.path.join(d, n) for n in names if n.startswith("part-"))
+        if parts:
+            out[os.path.relpath(d, root)] = parts
+    return out
+
+
+def _hosts_programs(spark, n, hot_share=0.0):
+    """``n`` rows (id, host, program, sev, payload) over ``repartition(4)``:
+    every task touches every directory. ``hot_share`` of the rows get
+    host ``hot``; a few get a NULL host."""
+    hot = int(n * hot_share)
+    return spark.range(n).selectExpr(
+        "id",
+        f"CASE WHEN id < {hot} THEN 'hot' WHEN id % 97 = 5 THEN NULL "
+        "ELSE concat('h', CAST(id % 7 AS STRING)) END AS host",
+        "concat('p', CAST(id % 5 AS STRING)) AS program",
+        "CAST(id % 3 AS STRING) AS sev",
+        "md5(CAST(id AS STRING)) AS payload",
+    ).repartition(4)
+
+
+_LAYOUT_CFG = """
+switch $sev {
+  case ~^0$~ { to file 'a/{$host}'; }
+  default { to file 'b/{$program}'; }
+}
+"""
+
+
+def test_config_templated_sink_one_file_per_directory(spark, tmp_path):
+    """A field-templated sink is clustered by its path fields before the
+    write: a 4-partition input lands as ONE file per leaf directory, and
+    its rows equal the same config's rows over a 1-partition input."""
+    df = _hosts_programs(spark, 600)
+    res = C.run_config_pipeline(spark, df, _LAYOUT_CFG, str(tmp_path / "o"))
+    ref = C.run_config_pipeline(spark, df.coalesce(1), _LAYOUT_CFG, str(tmp_path / "ref"))
+    for i, field, n_dirs in ((0, "host", 8), (1, "program", 5)):
+        layout = _part_files(tmp_path / "o" / f"sink_{i}")
+        assert len(layout) == n_dirs
+        assert all(d.startswith(f"{field}=") for d in layout)
+        assert {d: len(f) for d, f in layout.items()} == {d: 1 for d in layout}
+        cols = sorted(res[f"sink_{i}"].columns)
+        got, want = (r[f"sink_{i}"].select(cols).orderBy("id").collect() for r in (res, ref))
+        assert got == want and len(got) == 200 * (i + 1)
+
+
+def test_config_buffer_bounds_rows_per_file_on_templated_sink(spark, tmp_path):
+    """`buffer N` still caps every file at N rows once the sink is
+    clustered by its path fields, and each row lands exactly once."""
+    import pyarrow.parquet as pq
+
+    df = _hosts_programs(spark, 300)
+    C.run_config_pipeline(spark, df, "buffer 10; to file 'x/{$host}';", str(tmp_path / "o"))
+    ids = []
+    for files in _part_files(tmp_path / "o" / "sink_0").values():
+        for f in files:
+            t = pq.read_table(f)
+            assert t.num_rows <= 10
+            ids += t.column("id").to_pylist()
+    assert sorted(ids) == list(range(300))
+
+
+def test_config_templated_sink_null_field_one_file(spark, tmp_path):
+    """A NULL path-field value lands in exactly one file under Hive's
+    default partition directory."""
+    import pyarrow.parquet as pq
+
+    df = _hosts_programs(spark, 600)
+    want = sorted(r.id for r in df.filter("host IS NULL").select("id").collect())
+    assert len(want) > 4
+    C.run_config_pipeline(spark, df, "to file 'x/{$host}';", str(tmp_path / "o"))
+    files = _part_files(tmp_path / "o" / "sink_0")["host=__HIVE_DEFAULT_PARTITION__"]
+    assert len(files) == 1
+    assert sorted(pq.read_table(files[0]).column("id").to_pylist()) == want
+
+
+def test_config_templated_sink_splits_skewed_directory(spark, tmp_path):
+    """Scale safety of REBALANCE over ``repartition(cols)``: when one path
+    value holds ≥90% of the rows and its shuffle partition exceeds the
+    advisory size, AQE splits it, so that directory is written as more
+    than one file — and each row still lands exactly once."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "4k")
+    try:
+        n = 4000
+        df = _hosts_programs(spark, n, hot_share=0.92)
+        C.run_config_pipeline(spark, df, "to file 'x/{$host}';", str(tmp_path / "o"))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    layout = _part_files(tmp_path / "o" / "sink_0")
+    assert len(layout["host=hot"]) > 1
+    ids = [i for files in layout.values() for f in files for i in pq.read_table(f).column("id").to_pylist()]
+    assert sorted(ids) == list(range(n))
+
+
 def test_config_dry_run_validates_without_writing(spark, tmp_path):
     """dry_run ≡ beholder --test: plans are analyzed, nothing written."""
     import os
