@@ -842,6 +842,9 @@ def run_config_stream(
                 frame.withColumn("_batch", key),
                 partition_col="_batch",
                 partition_by=extra,
+                # file-keyed directories: one scan task each already (see
+                # write_manifested_stream), so no rebalance shuffle
+                rebalance=False,
             )
 
     w = source_stream.writeStream.foreachBatch(write_batch).option(

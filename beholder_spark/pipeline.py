@@ -30,6 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beholder_spark import sinks as sk
 from beholder_spark.functions import extract_text_udf
 from beholder_spark.operators import fields as fo
 from beholder_spark.operators import route as ro
@@ -243,12 +244,15 @@ def run_pages_pipeline(
     """Full parse→enrich→route→aggregate over the pages table.
 
     Scale shape: the parse+enrich+route chain is ONE narrow pass (pandas
-    UDF + broadcast join + codegen'd projections — zero shuffles); the
-    fan-out is ONE partitionBy(route, day) write; aggregates shuffle only
-    (route, host, lang, bucket) partial counts. The aggregate is a plain
-    groupBy count, not salted: map-side partial aggregation sends each
-    reducer at most one row per key per input task, so a hot host costs
-    its reducer one partial row per task, not one row per page.
+    UDF + broadcast join + codegen'd projections — no shuffle of its own);
+    the fan-out is ONE ``sinks.write_table`` partitioned by (day, route) —
+    ``_run_id`` first when checkpointed — whose ``REBALANCE`` shuffle
+    puts each directory in one task, so one file per directory;
+    aggregates shuffle only (route, host, lang, bucket) partial counts.
+    The aggregate is a plain groupBy count, not salted: map-side partial
+    aggregation sends each reducer at most one row per key per input
+    task, so a hot host costs its reducer one partial row per task, not
+    one row per page.
     """
     from beholder_spark.session import ship_package
 
@@ -295,11 +299,9 @@ def run_pages_pipeline(
             },
         )
     else:
-        routed_tbl = routed.drop(*sink_drop)
-        routed_tbl.write.mode("overwrite").partitionBy("day", "route").parquet(
-            os.path.join(out_root, "routed")
-        )
-        routed_tbl = spark.read.parquet(os.path.join(out_root, "routed"))
+        routed_path = os.path.join(out_root, "routed")
+        sk.write_table(routed.drop(*sink_drop), routed_path, ["day", "route"])
+        routed_tbl = spark.read.parquet(routed_path)
 
     # per-sink aggregate counts: messages per (route, host, lang, hour)
     counts = (

@@ -2,8 +2,14 @@
 "resumable without recomputation ... per-partition lineage and metrics").
 
 Design: each pipeline stage may be *checkpointed* to a stage table keyed
-by a partition column (e.g. ``day`` from warc_ts). Two bookkeeping tables
-live under the pipeline root:
+by a partition column (e.g. ``day`` from warc_ts). The stage data goes
+through :func:`beholder_spark.sinks.write_table`, the engine's one
+partitioned writer: rebalanced by ``(_run_id, partition column, extra
+partition columns)``, so a run writes one file per directory (more only
+where AQE splits a skewed one), not one per scan task × directory. The
+streaming stages keyed by source file skip the shuffle
+(``rebalance=False``): a scan task already holds each such directory. Two
+bookkeeping tables live under the pipeline root:
 
 - ``_manifest``  — (stage, partition, run_id) rows; a partition appears
   once its stage output is durably written. Resume = anti-join pending
@@ -44,6 +50,8 @@ import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from beholder_spark import sinks as sk
 
 MANIFEST = "_manifest"
 LINEAGE = "_lineage"
@@ -187,14 +195,21 @@ def run_stage(
     extra_metrics: dict[str, F.Column] | None = None,
     partition_by: list[str] | None = None,
     extra_lineage: dict[str, int] | None = None,
+    rebalance: bool = True,
 ) -> DataFrame:
     """Execute one checkpointed stage: write pending partitions under a
     run_id-scoped directory, record manifest + lineage, return the
     manifested stage table (for the next stage).
 
-    ``df.observe`` attaches counters to the write action itself — metrics
-    cost zero extra passes over the data. ``extra_metrics`` adds stage-
-    specific aggregates (e.g. parse_failures = count_if(NOT parse_ok)).
+    The write is :func:`beholder_spark.sinks.write_table` in append mode,
+    partitioned by ``[_run_id, partition_col, *partition_by]`` — one
+    ``REBALANCE`` shuffle, then one file per directory (``rebalance=False``
+    skips the shuffle where a scan task already holds whole directories,
+    e.g. the streaming stages keyed by source file). Its ``observe``
+    attaches counters to the write action itself, above the shuffle —
+    metrics cost zero extra passes over the data, and still report when a
+    resume prunes every row. ``extra_metrics`` adds stage-specific
+    aggregates (e.g. parse_failures = count_if(NOT parse_ok)).
     Write-then-manifest ordering + run_id scoping makes the stage
     crash-safe: a failure anywhere before the manifest append leaves only
     an invisible orphan dir (see module docstring).
@@ -210,21 +225,22 @@ def run_stage(
     metrics: dict[str, F.Column] = {"rows_out": F.count(F.lit(1))}
     metrics.update(extra_metrics or {})
     obs = Observation(f"lineage_{stage}_{run_id}")
-    observed = pending.observe(
-        obs,
-        *[c.alias(k) for k, c in metrics.items()],
-        # partition values captured during the SAME action — no extra pass;
-        # NULL partitions tracked under the sentinel key
-        F.collect_set(_partition_key(partition_col)).alias("_parts"),
-    )
 
     t0 = time.monotonic()
-    w = (
-        observed.withColumn(RUN_COL, F.lit(run_id))
-        .write.mode("append")
-        .partitionBy(RUN_COL, partition_col, *(partition_by or []))
+    sk.write_table(
+        pending.withColumn(RUN_COL, F.lit(run_id)),
+        out_path,
+        [RUN_COL, partition_col, *(partition_by or [])],
+        mode="append",
+        rebalance=rebalance,
+        observe=(
+            obs,
+            *[c.alias(k) for k, c in metrics.items()],
+            # partition values captured during the SAME action — no extra
+            # pass; NULL partitions tracked under the sentinel key
+            F.collect_set(_partition_key(partition_col)).alias("_parts"),
+        ),
     )
-    w.parquet(out_path)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
     got = obs.get

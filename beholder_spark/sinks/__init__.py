@@ -190,8 +190,13 @@ def write_table(
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
     max_records_per_file: int | None = None,
+    observe: tuple | None = None,
+    rebalance: bool = True,
 ) -> None:
     """K2 ``to file <tpl>``: field-templated path ≡ partition columns.
+    The engine's only partitioned writer: config file sinks, the
+    checkpointed stages (:func:`beholder_spark.plans.lineage.run_stage`),
+    the uncheckpointed flagship and the streaming fan-out all call it.
 
     A partitioned write is first clustered by its partition columns with
     a ``REBALANCE`` hint (one shuffle), so each directory is written by
@@ -200,10 +205,20 @@ def write_table(
     ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and merges small
     ones; Spark ignores the hint when AQE is off (``get_spark`` turns it
     on). ``max_records_per_file`` (``buffer N``, K5) still bounds the
-    rows per file. An unpartitioned write keeps its input partitioning.
+    rows per file. An unpartitioned write keeps its input partitioning,
+    and so does ``rebalance=False``: for a caller whose directories
+    never straddle scan tasks, the shuffle would buy no fewer files.
+
+    ``observe`` is ``(Observation, *metric_columns)``, applied ABOVE the
+    hint. When every row was pruned (a resume) the shuffle is empty, and
+    AQE replaces it, map side included, with an empty relation: an
+    observe below the hint would vanish from the final plan with it, and
+    ``Observation.get`` would fail after the data write.
     """
-    if partition_by:
+    if partition_by and rebalance:
         df = df.hint("rebalance", *partition_by)
+    if observe:
+        df = df.observe(*observe)
     w = df.write.mode(mode).format(SINK_FORMAT)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beholder_spark.pipeline import compile_pipeline
+from beholder_spark.sinks import write_table
 
 
 def read_pages_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -67,14 +68,15 @@ def run_stream_once(
     (trigger availableNow) — the batch-equivalence test harness.
 
     ``foreachBatch`` gives each micro-batch the full batch writer —
-    including partitionBy fan-out — with exactly-once bookkeeping from
-    the streaming checkpoint (the streaming twin of our manifest).
+    :func:`beholder_spark.sinks.write_table`'s clustered fan-out by
+    ``route_col`` — with exactly-once bookkeeping from the streaming
+    checkpoint (the streaming twin of our manifest).
     """
     stream = read_pages_stream(spark, source_path, schema)
     routed = compile_pipeline(stream, spec)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").partitionBy(route_col).parquet(out_path)
+        write_table(batch_df, out_path, [route_col], mode="append")
 
     q = (
         routed.writeStream.foreachBatch(write_batch)
@@ -188,9 +190,12 @@ def write_manifested_stream(
                 # partition top-N then merge, never a full global sort
                 b = b.orderBy(order_col).limit(buffer_rows)
                 dropped = n_in - buffer_rows
+        # no rebalance: each _batch directory is one source file, which
+        # one scan task reads whole (below spark.sql.files.maxPartitionBytes)
+        # — a shuffle would cost time and save no file
         ln.run_stage(
             b.sparkSession, out_root, stage, b, partition_col="_batch",
-            extra_lineage={"dropped_overflow": dropped},
+            extra_lineage={"dropped_overflow": dropped}, rebalance=False,
         )
 
     w = (

@@ -204,6 +204,77 @@ def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, mo
     assert sorted(lin.rows_out.tolist()) == [0, 3]  # crash run never logged
 
 
+def _leaf_files(routed_dir: str, depth: int = 3) -> dict[str, int]:
+    """Leaf directory ``depth`` levels down (``_run_id=*/day=*/route=*`` by
+    default), as a relative path → its ``part-*`` count."""
+    import os
+
+    out = {}
+    for dp, _dirs, files in os.walk(routed_dir):
+        rel = os.path.relpath(dp, routed_dir)
+        if rel.count(os.sep) == depth - 1:
+            out[rel] = sum(f.startswith("part-") for f in files)
+    return out
+
+
+def _write_split(table, out_dir: str, n_files: int = 4) -> str:
+    import os
+
+    os.makedirs(out_dir)
+    step = -(-table.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(table.slice(i * step, step), os.path.join(out_dir, f"part-{i}.parquet"))
+    return out_dir
+
+
+def test_routed_stage_writes_one_file_per_leaf(spark, tmp_path):
+    """Crawl-ordered input in 4 files: days straddle file (= scan task)
+    boundaries, so a per-task writer would put 2 files into the straddling
+    day/route leaves. The routed stage is rebalanced by its partition
+    columns: every leaf holds exactly one file, on the first run and on a
+    resumed run over new days, and the rows are the golden text. The
+    uncheckpointed path (``day=*/route=*``) writes one file per leaf too."""
+    import datetime as dt
+    import os
+
+    import pyarrow.compute as pc
+
+    from beholder_spark import fixtures
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 4
+    pages = fixtures.gen_pages(2000, 3).sort_by("warc_ts")
+    early = pages.filter(pc.less(pages["warc_ts"], dt.datetime(2026, 1, 5)))
+    lp = str(tmp_path / "lookup.parquet")
+    pq.write_table(fixtures.gen_host_lookup(3), lp)
+    out = str(tmp_path / "out")
+    routed_dir = os.path.join(out, "routed")
+
+    run_pages_pipeline(spark, _write_split(early, str(tmp_path / "early")), lp, out)
+    first = _leaf_files(routed_dir)
+    assert len(first) > 4 and first == {k: 1 for k in first}
+
+    all_dir = _write_split(pages, str(tmp_path / "all"))
+    res = run_pages_pipeline(spark, all_dir, lp, out)
+    second = _leaf_files(routed_dir)
+    new = {k: v for k, v in second.items() if k not in first}
+    assert {k: second[k] for k in first} == first  # resume left old leaves alone
+    assert new and new == {k: 1 for k in new}  # one file per new leaf
+    new_days = {k.split(os.sep)[1] for k in new}
+    assert new_days == {f"day=2026-01-0{d}" for d in (5, 6, 7)}
+
+    def key(url, ts, text):
+        return (url, ts, text is not None, text or "")
+
+    got = sorted(key(*r) for r in res["routed"].select("url", "warc_ts", "text_out").collect())
+    exp = sorted(key(*r) for r in zip(*(pages[c].to_pylist() for c in ("url", "warc_ts", "text"))))
+    assert got == exp
+
+    flat = str(tmp_path / "flat")
+    run_pages_pipeline(spark, all_dir, lp, flat, checkpoint=False)
+    leaves = _leaf_files(os.path.join(flat, "routed"), depth=2)
+    assert len(leaves) > 4 and leaves == {k: 1 for k in leaves}
+
+
 def _days_frame(spark, days):
     import datetime as dt
 

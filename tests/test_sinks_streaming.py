@@ -38,13 +38,15 @@ def test_fanout_branches_equal_single_pass(spark, tmp_path):
 
 def test_streaming_matches_batch(spark, fixture_dir, tmp_path):
     """availableNow streaming run of the SAME compiled pipeline must land
-    exactly the batch row sets per route."""
+    exactly the batch row sets per route, one file per route directory:
+    every route spans all 4 input files (scan tasks), and the micro-batch
+    writer is rebalanced by the route."""
     from beholder_spark.pipeline import compile_pipeline, pages_spec
     from beholder_spark.streaming import run_stream_once
 
     # streaming file source needs a directory — stage pages into one
     pages_path = str(tmp_path / "pages_dir")
-    spark.read.parquet(f"{fixture_dir}/pages.parquet").write.parquet(pages_path)
+    spark.read.parquet(f"{fixture_dir}/pages.parquet").repartition(4).write.parquet(pages_path)
     lookup = spark.read.parquet(f"{fixture_dir}/host_lookup.parquet")
     schema = spark.read.parquet(pages_path).schema
     spec = pages_spec(lookup)
@@ -62,6 +64,12 @@ def test_streaming_matches_batch(spark, fixture_dir, tmp_path):
         r.route: r.n for r in batch.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert stream_counts == batch_counts
+    per_dir = {
+        d: sum(f.startswith("part-") for f in os.listdir(os.path.join(out, d)))
+        for d in os.listdir(out)
+        if d.startswith("route=")
+    }
+    assert len(per_dir) == len(batch_counts) and set(per_dir.values()) == {1}, per_dir
 
 
 def test_session_window_stream_matches_batch_sessionize(spark, tmp_path):
