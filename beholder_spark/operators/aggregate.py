@@ -90,17 +90,16 @@ def sessionize(
     `gap_seconds` belong to one session.
 
     Classic lag + cumulative-sum formulation — entirely JVM window
-    functions, ONE shuffle on `key`, no Python and no stateful UDF (the
-    streaming twin is ``session_window``). Returns one row per session:
-    (key, session_start, session_end, n_events). Deterministic total
-    order via the tiebreak column for equal timestamps.
+    functions, ONE shuffle on `key`, no Python and no stateful UDF.
+    Returns one row per session: (key, session_start, session_end,
+    n_events). Deterministic total order via the tiebreak column for
+    equal timestamps.
 
     SPEC (boundary-inclusive, matching Spark's ``session_window`` which
-    merges touching [t, t+gap) windows — verified by the streaming-twin
-    test at the exact-gap boundary): two events exactly ``gap_seconds``
-    apart belong to the SAME session; a new session starts only when the
-    gap is STRICTLY greater. ``session_end`` here is max(ts); the
-    streaming twin's window end is last_ts + gap.
+    merges touching [t, t+gap) windows): two events exactly
+    ``gap_seconds`` apart belong to the SAME session; a new session
+    starts only when the gap is STRICTLY greater. ``session_end`` here is
+    max(ts); a ``session_window`` end is last_ts + gap.
     """
     order = [F.asc(ts_col)] + ([F.asc(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order)

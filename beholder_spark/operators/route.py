@@ -3,9 +3,8 @@
 Beholder routes each message through the first matching ``case`` block.
 Spark-first design: ONE projection computes a ``route`` column as an
 ordered ``when()`` chain (first-match-wins is the chain order), then the
-fan-out is either a single ``partitionBy(route)`` write or filtered DAG
-branches off a persisted parent (:mod:`beholder_spark.sinks`). The router
-itself never shuffles.
+fan-out is a single :func:`beholder_spark.sinks.write_table` partitioned
+by ``route``. The router itself never shuffles.
 
 SPEC no-match (R3 — reference default unverifiable): rows matching no
 case get route ``'_unmatched'`` and are written to a quarantine sink and
@@ -33,11 +32,6 @@ def switch(df: DataFrame, cases: list[tuple[Column, str]], route_col: str = "rou
     return df.withColumn(route_col, route_expr(cases, default))
 
 
-def switch_regexp(df: DataFrame, col: str, cases: list[tuple[str, str]], route_col: str = "route", default: str = UNMATCHED) -> DataFrame:
-    """R1 with regex cases (Beholder's ``case ~re~``)."""
-    return switch(df, [(F.col(col).rlike(pat), name) for pat, name in cases], route_col, default)
-
-
 def case_capture(df: DataFrame, col: str, pattern: str, groups: dict[str, int], route_col: str = "route", route_value: str | None = None) -> DataFrame:
     """R2: a matching case also extracts named groups into fields.
 
@@ -52,19 +46,3 @@ def case_capture(df: DataFrame, col: str, pattern: str, groups: dict[str, int], 
             F.when(matched, F.regexp_extract(F.col(col), pattern, idx)).otherwise(F.lit(None)),
         )
     return out
-
-
-def tee(df: DataFrame, side_effect):
-    """C2 ``tee { ... }``: run a side branch, original flow continues.
-
-    In an immutable DAG the "copy" is free: ``side_effect(df)`` builds a
-    second consumer. Caller persists the parent when both sides are
-    actions (see sinks.write_fanout_branches for the single-pass rule).
-    """
-    side_effect(df)
-    return df
-
-
-def flow(df: DataFrame, fn) -> DataFrame:
-    """C1 ``flow { ... }``: isolated sub-pipeline = a function DAG branch."""
-    return fn(df)

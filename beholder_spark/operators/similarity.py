@@ -1,14 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-- ``cosine_topk`` — brute-force exact top-k, the correctness baseline.
-  Vectors are quantized to int (round(x*1000)) so dot products are exact
-  integer arithmetic → the DuckDB oracle matches bit-for-bit, and the
-  JVM does the math (zip_with + aggregate, no Python).
-- ``lsh_cosine_topk`` — the scale path: sign-random-projection LSH
-  buckets candidates first, exact rerank only within buckets. At 10^9
-  vectors the brute force is O(n·q); LSH makes candidate generation a
-  bucket-join.
+Vectors are quantized to int (round(x*1000)) so dot products are exact
+integer arithmetic → the DuckDB oracle matches bit-for-bit, and the JVM
+does the math (zip_with + aggregate, no Python).
+
+- ``cosine_topk`` — brute-force exact top-k neighbors per query.
+- ``cosine_near_dup_pairs`` — brute-force near-duplicate pairs, the
+  correctness baseline of the scale path below.
+- ``lsh_near_dup_pairs`` — the scale path: integer sign-LSH buckets
+  candidates first, exact rerank only within buckets. At 10^9 vectors
+  the brute force is O(n²); LSH makes candidate generation a bucket-join.
 """
 
 from __future__ import annotations
@@ -59,181 +60,6 @@ def cosine_topk(
         F.round(
             _int_dot(F.col("qv"), F.col("cv"))
             / (F.sqrt(_int_norm2(F.col("qv"))) * F.sqrt(_int_norm2(F.col("cv")))),
-            4,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "cosine", "rank")
-    )
-
-
-def _det_planes(n: int, dim: int, tag: str = "plane") -> list[list[float]]:
-    """Deterministic pseudo-random unit-free vectors (md5-nibble derived) —
-    reruns produce identical buckets, required for resume/lineage."""
-    import hashlib
-
-    out = []
-    for j in range(n):
-        vals: list[float] = []
-        i = 0
-        while len(vals) < dim:
-            h = hashlib.md5(f"{tag}:{j}:{i}".encode()).hexdigest()
-            vals.extend((int(ch, 16) - 7.5) / 7.5 for ch in h)
-            i += 1
-        out.append(vals[:dim])
-    return out
-
-
-def train_kmeans_centroids(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int = 8,
-    n_iter: int = 5,
-    dim: int = 64,
-) -> list[list[float]]:
-    """Deterministic spherical k-means codebook for IVF: assignment is
-    max-dot against UNIT centroids (the right objective when queries
-    probe by cosine), means are re-normalized each round, empty cells
-    keep their previous centroid.
-
-    Determinism (required for resume/lineage): seeds are the
-    ``n_centroids`` rows with the smallest md5(id) — no rand(), identical
-    codebook on every run/engine. Each iteration is one narrow
-    assignment pass + one (cell, dim) sum/count aggregate; only the
-    K×dim centroid table (a few KB) is collected to the driver and
-    re-broadcast as literals — the classic Lloyd's-on-a-cluster shape
-    where per-iteration driver traffic is O(K·dim), never O(rows).
-    """
-    import math
-
-    def _norm(v: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        return [x / n for x in v]
-
-    seeds = (
-        vectors.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("_h", id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    cents = [_norm([float(x) for x in r[vec_col]]) for r in seeds]
-
-    def best_cell(vc: Column, cents_now: list[list[float]]) -> Column:
-        # min over (−dot, cell): max dot with deterministic cell tie-break
-        scores = []
-        for ci, c in enumerate(cents_now):
-            arr = F.array(*[F.lit(v) for v in c])
-            # accumulate NEGATED dot directly (a - x): negating the lambda-
-            # aggregate column afterwards loses the struct field name
-            negdot = F.aggregate(
-                F.zip_with(vc, arr, lambda x, y: x * y), F.lit(0.0), lambda a, x: a - x
-            )
-            scores.append(F.struct(negdot.alias("negs"), F.lit(ci).alias("cell")))
-        # element_at(array_sort) rather than array_min: array_min's return
-        # type drops struct field names in this Spark version
-        return F.element_at(F.array_sort(F.array(*scores)), 1).getField("cell")
-
-    for _ in range(n_iter):
-        # assignment and posexplode in SEPARATE selects: a generator in
-        # the same projection makes the analyzer rewrite the lambda
-        # struct and drop its field names
-        assigned = (
-            vectors.select(F.col(vec_col).alias("_v"))
-            .withColumn("cell", best_cell(F.col("_v"), cents))
-            .select("cell", F.posexplode("_v").alias("pos", "x"))
-        )
-        rows = (
-            assigned.groupBy("cell", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        sums: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        for r in rows:
-            sums.setdefault(r["cell"], [0.0] * dim)[r["pos"]] = float(r["s"])
-            counts[r["cell"]] = int(r["n"])
-        cents = [
-            _norm([v / counts[ci] for v in sums[ci]]) if ci in sums else cents[ci]
-            for ci in range(n_centroids)
-        ]
-    return cents
-
-
-def ivf_cosine_topk(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids_max: int,
-    k: int = 3,
-    n_centroids: int = 8,
-    n_probe: int = 4,
-    dim: int = 64,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF-style ANN: assign every vector to its nearest pseudo-centroid
-    (deterministic md5-derived centroids — a stand-in for a trained
-    k-means codebook, same plumbing), queries probe their `n_probe`
-    nearest cells, exact rerank within probed cells only. Measured
-    recall@5 on the embeddings fixture: 0.44/0.56/0.69 at n_probe=2/3/4
-    (fixture centroids are untrained, so cells barely cluster — a real
-    k-means codebook with n_probe/n_centroids ≪ 1/2 does far better; the
-    probe knob trades recall for join width identically either way).
-
-    Scale shape: centroid assignment is a narrow map (JVM expressions);
-    the probe join keys on cell id — shuffle bytes ∝ cells probed, never
-    O(n·q). Approximate by construction → rows-only check; the exact twin
-    is :func:`cosine_topk`.
-
-    Pass ``centroids`` (e.g. from :func:`train_kmeans_centroids`) to use
-    a trained codebook — measured on the embeddings fixture it lifts
-    recall@5 substantially over the untrained stand-in at the same
-    n_probe (numbers in BENCH/BASELINE.md).
-    """
-    from pyspark.sql import Window
-
-    cents = centroids if centroids is not None else _det_planes(n_centroids, dim, tag="ivf")
-
-    def cell_scores(vc: Column) -> Column:
-        scores = []
-        for ci, c in enumerate(cents):
-            arr = F.array(*[F.lit(v) for v in c])
-            dot = F.aggregate(
-                F.zip_with(vc, arr, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-            )
-            scores.append(F.struct(dot.alias("s"), F.lit(ci).alias("cell")))
-        return F.reverse(F.array_sort(F.array(*scores)))
-
-    scored_cells = vectors.select(
-        F.col(id_col),
-        quantize(F.col(vec_col)).alias("qv"),
-        cell_scores(F.col(vec_col)).alias("cells"),
-    )
-    data = scored_cells.select(
-        F.col(id_col).alias("nid"),
-        F.col("qv").alias("cvec"),
-        F.element_at("cells", 1).getField("cell").alias("cell"),
-    )
-    probes = (
-        scored_cells.filter(F.col(id_col) < query_ids_max)
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col("qv").alias("qvec"),
-            F.explode(F.slice("cells", 1, n_probe)).alias("probe"),
-        )
-        .select("qid", "qvec", F.col("probe.cell").alias("cell"))
-    )
-    pairs = data.join(F.broadcast(probes), on="cell").filter(F.col("nid") != F.col("qid"))
-    scored = pairs.select(
-        "qid",
-        "nid",
-        F.round(
-            _int_dot(F.col("qvec"), F.col("cvec"))
-            / (F.sqrt(_int_norm2(F.col("qvec"))) * F.sqrt(_int_norm2(F.col("cvec")))),
             4,
         ).alias("cosine"),
     )
@@ -377,97 +203,3 @@ def lsh_near_dup_pairs(
         )
     )
     return scored.filter(F.col("cosine") >= threshold)
-
-
-def lsh_cosine_topk(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids_max: int,
-    k: int = 3,
-    n_tables: int = 16,
-    planes_per_table: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Scale path: MULTI-TABLE sign-LSH candidate union, exact rerank.
-
-    One sign-LSH table of b planes misses any neighbor differing in ≥1 of
-    b signs — recall collapses as b grows (measured 0.02@k=5 with a
-    single 6-plane table on the embeddings fixture). The standard fix is
-    L independent tables of b planes each: a neighbor is a candidate if
-    it collides in ANY table, P(candidate) = 1 − (1 − p^b)^L, tunable via
-    (L, b) exactly like MinHash banding — measured on the embeddings
-    fixture: 0.72 recall@5 at (L=8, b=4), 0.96 at the (16, 4) defaults.
-    At larger corpus scale raise b (smaller buckets) and L together to
-    hold recall while keeping candidates per query sublinear. Candidates are distinct (qid,
-    nid) pairs from the per-table bucket joins; vectors are gathered back
-    by id for the exact rerank (broadcast for queries, id-join for the
-    big side — shuffle ∝ candidates, never O(n·q)).
-
-    Hyperplanes are deterministic pseudo-random (md5-nibble derived), so
-    reruns produce identical buckets — required for resume/lineage.
-    Approximate by construction → rows-only check; recall@k vs
-    :func:`cosine_topk` is measured in tests/test_dedup_similarity.py and
-    recorded in BENCH/BASELINE.md.
-    """
-    from pyspark.sql import Window
-
-    planes = _det_planes(n_tables * planes_per_table, dim)
-
-    def table_buckets(vc: Column) -> Column:
-        """array<struct<table,bucket>>: per table, bucket = sign bits of
-        that table's planes packed into an int."""
-        tables = []
-        for t in range(n_tables):
-            acc = F.lit(0)
-            for j in range(planes_per_table):
-                p = planes[t * planes_per_table + j]
-                arr = F.array(*[F.lit(v) for v in p])
-                dot = F.aggregate(
-                    F.zip_with(vc, arr, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-                )
-                acc = acc + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            tables.append(F.struct(F.lit(t).alias("t"), acc.alias("bucket")))
-        return F.array(*tables)
-
-    vb = vectors.select(
-        F.col(id_col),
-        quantize(F.col(vec_col)).alias("qv"),
-        table_buckets(F.col(vec_col)).alias("tb"),
-    )
-    exploded = vb.select(F.col(id_col), F.explode("tb").alias("b")).select(
-        id_col, F.col("b.t").alias("t"), F.col("b.bucket").alias("bucket")
-    )
-    q_b = exploded.filter(F.col(id_col) < query_ids_max).select(
-        F.col(id_col).alias("qid"), "t", "bucket"
-    )
-    c_b = exploded.select(F.col(id_col).alias("nid"), "t", "bucket")
-    cand = (
-        c_b.join(F.broadcast(q_b), on=["t", "bucket"])
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid")
-        .distinct()  # a pair colliding in several tables reranks once
-    )
-    qvecs = vb.filter(F.col(id_col) < query_ids_max).select(
-        F.col(id_col).alias("qid"), F.col("qv").alias("qvec")
-    )
-    cvecs = vb.select(F.col(id_col).alias("nid"), F.col("qv").alias("cvec"))
-    scored = (
-        cand.join(F.broadcast(qvecs), "qid")
-        .join(cvecs, "nid")
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                _int_dot(F.col("qvec"), F.col("cvec"))
-                / (F.sqrt(_int_norm2(F.col("qvec"))) * F.sqrt(_int_norm2(F.col("cvec")))),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "cosine", "rank")
-    )

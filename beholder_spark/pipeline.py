@@ -189,51 +189,6 @@ def pages_spec(lookup: DataFrame) -> list[dict[str, Any]]:
     ]
 
 
-def run_curation_pipeline(
-    spark: SparkSession,
-    docs_path: str,
-    out_root: str,
-    min_tokens: int = 20,
-    max_dup_word_ratio: float = 0.5,
-) -> dict[str, DataFrame]:
-    """The training-data curation pipeline with the SAME checkpoint/
-    lineage machinery as the log pipeline: score → exact-dedup+filter,
-    each stage a manifested, per-language-partition resumable table.
-
-    Stage 1 (`scored`): quality + repetition signals + content
-    fingerprint — all scan-fused column expressions, partitioned by lang.
-    Stage 2 (`curated`): keep the lowest doc_id per fingerprint
-    (WindowGroupLimit pushes the top-1 map-side), drop short/repetitive
-    docs. A crash anywhere leaves orphan run dirs that resume re-runs
-    exactly once (run_id scoping, lineage.py); a completed lang partition
-    is never recomputed OR re-read for scoring (manifest anti-join).
-    """
-    from pyspark.sql import Window
-
-    from beholder_spark.operators import textstats, webtext
-    from beholder_spark.session import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(docs_path).filter(F.col("text").isNotNull())
-    scored = textstats.with_fingerprint(
-        webtext.with_repetition_stats(textstats.with_quality(docs))
-    )
-    scored_tbl = ln.run_stage(spark, out_root, "scored", scored, partition_col="lang")
-
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    kept = (
-        scored_tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    curated = kept.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("dup_word_ratio") <= max_dup_word_ratio)
-    )
-    curated_tbl = ln.run_stage(spark, out_root, "curated", curated, partition_col="lang")
-    return {"scored": scored_tbl, "curated": curated_tbl}
-
-
 def run_pages_pipeline(
     spark: SparkSession,
     pages_path: str,

@@ -647,8 +647,7 @@ def running_total_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sessionize_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap): lag + cumulative sum — pure
-    JVM window functions, one shuffle on user_id; ``session_window`` is
-    the streaming twin."""
+    JVM window functions, one shuffle on user_id."""
     return agg.sessionize(
         _t(spark, sf_dir, "events"), "user_id", "ts", gap_seconds=1800, tiebreak="event_id"
     ).select("user_id", "session_id", "session_start", "session_end", "n_events")
@@ -1618,24 +1617,6 @@ def dedup_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.42,
         max_bucket_size=40,
     )
-
-
-@_register("embed_ivf_cosine_topk", None)  # approximate: rows-only check
-def embed_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN (deterministic pseudo-centroids, n_probe=2 cells,
-    exact rerank within probed cells); rows-only — the exact twin is
-    embed_cosine_topk."""
-    return similarity.ivf_cosine_topk(
-        _t(spark, sf_dir, "embeddings"), "vec_id", "embedding", query_ids_max=5, k=3
-    )
-
-
-@_register("embed_lsh_cosine_topk", None)  # approximate: rows-only check
-def embed_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path ANN: sign-LSH bucket join + exact rerank within bucket.
-    Approximate by construction (recall<1) → no SQL oracle; the exact
-    twin above is the correctness baseline."""
-    return similarity.lsh_cosine_topk(_t(spark, sf_dir, "embeddings"), "vec_id", "embedding", query_ids_max=5, k=3)
 
 
 # ---------------------------------------------------------------------------

@@ -15,10 +15,12 @@ SINK_FORMAT = "parquet"  # "iceberg" in production; single switch point
 
 
 def send_partition_to_socket(host: str, port: int, line_col: str):
-    """Executor-side sender for :func:`write_socket_stream`: one TCP
-    connection per partition (Beholder's sender-pool analogue — senders
-    run in parallel across executors, never through the driver). NULL
-    lines are skipped (nothing to frame)."""
+    """K3 ``to tcp host:port`` executor-side sender (config
+    ``foreachPartition``): one TCP connection per partition, rows
+    newline-framed (Beholder's sender-pool analogue — senders run in
+    parallel across executors, never through the driver). At-least-once:
+    a failed send fails the task and Spark's retry resends the partition.
+    NULL lines are skipped (nothing to frame)."""
 
     def send(rows) -> None:
         import socket as _socket
@@ -35,40 +37,10 @@ def send_partition_to_socket(host: str, port: int, line_col: str):
     return send
 
 
-def write_socket_stream(
-    stream: DataFrame,
-    host: str,
-    port: int,
-    checkpoint_path: str,
-    line_col: str = "payload",
-    available_now: bool = True,
-):
-    """K3 ``to tcp host:port`` as a LIVE sink: each micro-batch's rows are
-    serialized newline-framed and sent over TCP from the executors
-    (``foreachPartition`` — one connection per partition, parallel
-    senders, zero driver-side data movement).
-
-    Delivery semantics: at-least-once — a failed send fails the batch,
-    the streaming checkpoint retries it (the socket peer must tolerate
-    replays; Beholder's UDP/TCP senders are also at-least-once at best).
-    Returns the started StreamingQuery (caller awaits/stops).
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.foreachPartition(send_partition_to_socket(host, port, line_col))
-
-    w = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
 def send_partition_to_udp(host: str, port: int, line_col: str, max_bytes: int = 60000):
-    """Executor-side sender for :func:`write_udp_stream`: one datagram per
-    row (Beholder's native transport — syslog-over-UDP). One socket per
+    """K3 ``to udp host:port`` executor-side sender (config
+    ``foreachPartition``): one datagram per row (Beholder's native
+    transport — syslog-over-UDP). One socket per
     partition; rows longer than ``max_bytes`` are truncated at the UDP
     payload boundary (datagram semantics: oversize would raise EMSGSIZE
     and fail the batch — truncation-with-contract beats a poison-pill
@@ -93,61 +65,6 @@ def send_partition_to_udp(host: str, port: int, line_col: str, max_bytes: int = 
             sock.close()
 
     return send
-
-
-def write_udp_stream(
-    stream: DataFrame,
-    host: str,
-    port: int,
-    checkpoint_path: str,
-    line_col: str = "payload",
-    available_now: bool = True,
-):
-    """K3 ``to udp host:port`` as a LIVE sink: one datagram per row, sent
-    from the executors (``foreachPartition`` — parallel senders, zero
-    driver-side data movement), mirroring :func:`write_socket_stream`.
-
-    Delivery semantics: fire-and-forget per datagram (UDP loses what the
-    network loses — same contract as Beholder's UDP sender), but batch
-    REPLAY still follows the streaming checkpoint, so the peer may see
-    duplicates after a failure: at-most-once per send, at-least-once per
-    batch. Returns the started StreamingQuery."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.foreachPartition(send_partition_to_udp(host, port, line_col))
-
-    w = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    key: str,
-    n_buckets: int,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Hive-bucketed co-located table (SURVEY.md §4 'co-locate joins via
-    bucketing'): rows are hash-partitioned into ``n_buckets`` files by
-    ``key`` at WRITE time, so every later equi-join or aggregation on
-    ``key`` between tables bucketed with the SAME count reads co-located
-    buckets and needs NO exchange — the shuffle is paid once at table
-    maintenance and amortized over every downstream query. At 100 TB
-    that converts a per-query multi-TB shuffle into a per-ingest cost.
-    ``sortBy(key)`` additionally lets sort-merge join skip the per-bucket
-    sort when there is one file per bucket. Registered in the session
-    catalog (``saveAsTable`` — bucketing metadata lives in the catalog;
-    a plain path write cannot carry it)."""
-    w = df.write.mode(mode).format(SINK_FORMAT).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(name)
 
 
 def send_partition_to_shell(command: str, line_col: str):
@@ -195,8 +112,8 @@ def write_table(
 ) -> None:
     """K2 ``to file <tpl>``: field-templated path ≡ partition columns.
     The engine's only partitioned writer: config file sinks, the
-    checkpointed stages (:func:`beholder_spark.plans.lineage.run_stage`),
-    the uncheckpointed flagship and the streaming fan-out all call it.
+    checkpointed stages (:func:`beholder_spark.plans.lineage.run_stage`)
+    and the uncheckpointed flagship all call it.
 
     A partitioned write is first clustered by its partition columns with
     a ``REBALANCE`` hint (one shuffle), so each directory is written by
@@ -225,28 +142,3 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
-
-
-def write_fanout_single_pass(df: DataFrame, base_path: str, route_col: str = "route") -> None:
-    """R1 strategy (i): one ``partitionBy(route)`` write = one scan, one
-    shuffle, N sink directories ``{base_path}/{route_col}={value}/``.
-
-    Preferred over per-sink filtered writes when sinks share a schema;
-    use :func:`write_fanout_branches` when per-sink schemas diverge.
-    """
-    write_table(df, base_path, partition_by=[route_col])
-
-
-def write_fanout_branches(df: DataFrame, sinks: dict[str, str], route_col: str = "route") -> None:
-    """R1 strategy (ii): per-sink filtered branches off ONE materialized
-    parent. ``persist()`` bounds the cost to one upstream computation +
-    K cheap filtered scans of the cached routed rows; without it Spark
-    would recompute the whole parse→enrich chain per sink.
-    """
-    df = df.persist()
-    try:
-        df.count()  # materialize once
-        for route_value, path in sinks.items():
-            write_table(df.filter(df[route_col] == route_value).drop(route_col), path)
-    finally:
-        df.unpersist()

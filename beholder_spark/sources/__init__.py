@@ -86,34 +86,6 @@ def from_socket_stream(
     return df
 
 
-def from_rate_stream(
-    spark: SparkSession,
-    rows_per_batch: int,
-    source_tag: str = "timer",
-    advance_ms_per_batch: int = 1000,
-) -> DataFrame:
-    """S3/S5 ``from timer`` / ``from infinity`` as a LIVE stream:
-    ``rate-micro-batch`` emits ``rows_per_batch`` rows per trigger with
-    DETERMINISTIC timestamps (start epoch 0 + advance_ms per batch) and a
-    monotone ``value`` — unlike plain ``rate``, reruns produce identical
-    data, which keeps streaming tests oracle-comparable. Columns match
-    :func:`from_timer`: (tick, payload, source).
-    """
-    df = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .option("startTimestamp", 0)
-        .option("advanceMillisPerBatch", advance_ms_per_batch)
-        .load()
-    )
-    return df.select(
-        F.col("value").alias("tick"),
-        F.concat(F.lit("message-"), F.col("value")).alias("payload"),
-        F.lit(source_tag).alias("source"),
-        F.col("timestamp").alias("event_ts"),
-    )
-
-
 class _SpoolBridgeBase:
     """Shared listener→atomic-spool-file machinery: message buffering,
     atomic flush (hidden tmp → rename, visible to the tailing file

@@ -457,16 +457,18 @@ def test_config_to_stdout_debug_sink(spark, tmp_path, capsys):
     assert "hello-stdout-row" in capsys.readouterr().out
 
 
-def test_config_to_udp_sink(spark, tmp_path):
-    """K3 `to udp 'host:port'` in config text: one datagram per row sent
-    from the executors; the flow continues past the sink."""
+@pytest.mark.parametrize("kind", ["udp", "tcp"])
+def test_config_to_udp_sink(spark, tmp_path, kind):
+    """K3 `to udp|tcp 'host:port'` in config text: rows are sent from the
+    executors (one datagram per row, or newline-framed over one TCP
+    connection per partition); the flow continues past the sink."""
     import socket
     import threading
 
     lines_box, port_box = [], []
     ready, stop = threading.Event(), threading.Event()
 
-    def recv():
+    def recv_udp():
         sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         sock.bind(("127.0.0.1", 0))
         sock.settimeout(0.5)
@@ -480,20 +482,40 @@ def test_config_to_udp_sink(spark, tmp_path):
             lines_box.append(data.decode())
         sock.close()
 
-    t = threading.Thread(target=recv, daemon=True)
+    def recv_tcp():
+        # one connection per partition; each stream is newline-framed
+        with socket.socket(socket.AF_INET, socket.SOCK_STREAM) as srv:
+            srv.bind(("127.0.0.1", 0))
+            srv.listen(16)
+            srv.settimeout(0.5)
+            port_box.append(srv.getsockname()[1])
+            ready.set()
+            while not stop.is_set():
+                try:
+                    conn, _ = srv.accept()
+                except TimeoutError:
+                    continue
+                buf = b""
+                with conn:
+                    conn.settimeout(10)
+                    while chunk := conn.recv(65536):
+                        buf += chunk
+                lines_box.extend(buf.decode().split("\n")[:-1])
+
+    t = threading.Thread(target=recv_udp if kind == "udp" else recv_tcp, daemon=True)
     t.start()
     assert ready.wait(10)
 
-    df = spark.createDataFrame([(f"udp line {i}", "en") for i in range(20)], ["payload", "lang"])
+    df = spark.createDataFrame([(f"{kind} line {i}", "en") for i in range(20)], ["payload", "lang"])
     res = C.run_config_pipeline(
-        spark, df, f"to udp '127.0.0.1:{port_box[0]}'; to file 'f';", str(tmp_path / "o")
+        spark, df, f"to {kind} '127.0.0.1:{port_box[0]}'; to file 'f';", str(tmp_path / "o")
     )
     import time as _time
 
     _time.sleep(1)
     stop.set()
     t.join(10)
-    assert sorted(lines_box) == sorted(f"udp line {i}" for i in range(20))
+    assert sorted(lines_box) == sorted(f"{kind} line {i}" for i in range(20))
     assert res["sink_1"].count() == 20  # flow unaffected
 
 

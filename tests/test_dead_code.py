@@ -1,0 +1,46 @@
+"""Guard: every public top-level function in the package has a caller
+outside ``tests/``. References are read from the AST (names, attributes,
+``from … import``), so a mention in a docstring or comment does not count
+as a use. Decorated defs are skipped: registered queries are reached
+through ``QUERIES``."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+USERS = ["beholder_spark/**/*.py", "bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/*.py"]
+ALLOWED = {
+    "fixtures.write_fixtures": "the test suite's fixture writer (conftest.py); tests/ is not scanned",
+    "config.run_config_udp_daemon": "second daemon runner; folds into the CLI once it can stop cleanly",
+}
+
+
+def _refs(tree: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def test_no_def_is_reached_only_by_tests():
+    refs: set[str] = set()
+    defs: set[tuple[str, str]] = set()
+    for f in sorted({p for g in USERS for p in ROOT.glob(g)}):
+        tree = ast.parse(f.read_text(), str(f))
+        refs |= _refs(tree)
+        if f.is_relative_to(ROOT / "beholder_spark"):
+            mod = ".".join(f.relative_to(ROOT / "beholder_spark").with_suffix("").parts)
+            defs |= {
+                (mod.removesuffix(".__init__"), n.name)
+                for n in tree.body
+                if isinstance(n, ast.FunctionDef) and not n.decorator_list and not n.name.startswith("_")
+            }
+    dead = {f"{mod}.{name}" for mod, name in defs if name not in refs}
+    assert dead == set(ALLOWED)

@@ -63,7 +63,7 @@ def test_switch_first_match_wins(spark):
 
 def test_switch_regexp_and_capture(spark):
     df = spark.createDataFrame([("err: disk full",), ("ok",)], ["msg"])
-    out = route.switch_regexp(df, "msg", [("^err", "errors")])
+    out = route.switch(df, [(F.col("msg").rlike("^err"), "errors")])
     out = route.case_capture(out, "msg", r"^err: (\w+)", {"what": 1}, route_value="errors")
     rows = {r.msg: r for r in out.collect()}
     assert rows["err: disk full"].route == "errors"
@@ -84,12 +84,3 @@ def test_from_timer(spark):
     out = from_timer(spark, 5)
     assert out.count() == 5
     assert out.first().payload == "beholder timer"
-
-
-def test_tee_and_flow(spark):
-    df = spark.createDataFrame([(1,), (2,)], ["x"])
-    seen = {}
-    route.tee(df, lambda d: seen.setdefault("n", d.count()))
-    assert seen["n"] == 2
-    doubled = route.flow(df, lambda d: d.withColumn("x2", F.col("x") * 2))
-    assert {r.x2 for r in doubled.collect()} == {2, 4}

@@ -373,47 +373,6 @@ def test_run_stage_read_failure_propagates(spark, tmp_path, monkeypatch):
         ln.run_stage(spark, str(tmp_path / "root"), "s", _days_frame(spark, [1]), partition_col="day")
 
 
-def test_curation_pipeline_checkpointed_resume(spark, tmp_path):
-    """The curation pipeline (score → dedup+filter) runs under the same
-    manifest/lineage machinery as the log pipeline: correct counts vs a
-    direct computation, and a rerun recomputes NOTHING (rows_out 0 for
-    both stages)."""
-    from pyspark.sql import Window
-
-    from beholder_spark.operators import textstats, webtext
-    from beholder_spark.pipeline import run_curation_pipeline
-
-    docs_path = "/root/testdata/sf0.001/documents.parquet"
-    out_root = str(tmp_path / "curation")
-    res = run_curation_pipeline(spark, docs_path, out_root)
-
-    # direct (uncheckpointed) expectation
-    d = spark.read.parquet(docs_path).filter(F.col("text").isNotNull())
-    scored = textstats.with_fingerprint(
-        webtext.with_repetition_stats(textstats.with_quality(d))
-    )
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    expect = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .filter((F.col("n_tokens") >= 20) & (F.col("dup_word_ratio") <= 0.5))
-        .count()
-    )
-    assert res["curated"].count() == expect
-    assert res["scored"].count() == d.count()
-
-    # resume: nothing recomputed, nothing duplicated
-    res2 = run_curation_pipeline(spark, docs_path, out_root)
-    assert res2["curated"].count() == expect
-    lin = spark.read.parquet(f"{out_root}/_lineage")
-    per_run = (
-        lin.groupBy("stage").agg(F.min("rows_out").alias("mn"), F.max("rows_out").alias("mx")).collect()
-    )
-    for r in per_run:
-        assert r["mn"] == 0, f"stage {r['stage']}: resume should write 0 rows"
-        assert r["mx"] > 0, f"stage {r['stage']}: first run should write rows"
-
-
 def test_bpe_token_count_goldens(spark):
     """Exact BPE over the pinned merge table — hand-computed goldens.
 

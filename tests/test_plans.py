@@ -117,35 +117,6 @@ def test_salted_count_is_two_phase(spark, fixture_dir):
     assert plan.count("HashAggregate") >= 4
     assert "_salt" in plan
 
-def test_bucketed_join_is_shuffle_free(spark):
-    """Co-located bucketed tables: an equi-join on the bucket key between
-    two tables bucketed with the SAME count runs with ZERO exchanges on
-    either side (the shuffle was paid once at write), and the joined rows
-    are exactly the plain join's rows."""
-    from beholder_spark import sinks
-
-    a = spark.range(2000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("va")
-    )
-    b = spark.range(0, 4000).select(
-        (F.col("id") % 2000).alias("k2"), (F.col("id") % 13).alias("vb")
-    )
-    sinks.write_bucketed(a, "t_bucketed_a", "k", 8)
-    sinks.write_bucketed(b, "t_bucketed_b", "k2", 8)
-    try:
-        ta, tb = spark.table("t_bucketed_a"), spark.table("t_bucketed_b")
-        # force SMJ (tiny fixtures would otherwise broadcast, which proves
-        # nothing about bucket co-location)
-        joined = ta.hint("merge").join(tb, ta["k"] == tb["k2"])
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # neither side shuffles: co-located
-        assert joined.count() == 4000  # every b row matches exactly one a row
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_b")
-
-
 def test_broadcast_guard_engages_fallback_above_limit(spark):
     """bounded_small_side (VERDICT r3 item 3): under the row limit the
     small side broadcasts; above it the join falls back to a shuffled
