@@ -1,12 +1,13 @@
-"""Beholder config-language front end: config text → pipeline spec.
+"""Beholder config-language front end: config text → DataFrame transformations.
 
 The reference's user interface is a config file of commands
 (`beholder@public:README.md` — tokens are words, 'quoted strings' with
 ``{$field}`` / ``$field`` interpolation, ``~regex~`` literals, ``{ } ;``
 block structure; SURVEY.md §3.1). This module gives reference users that
-same surface on the Spark engine: the text compiles to the SAME stage
-specs that :func:`beholder_spark.pipeline.compile_pipeline` executes, so
-one config drives a batch or streaming DataFrame DAG.
+same surface on the Spark engine: the text compiles to DataFrame
+transformations over the same operators the flagship job
+(:func:`beholder_spark.pipeline.route_pages`) calls, so one config drives
+a batch or streaming DataFrame DAG.
 
 Supported command subset (the router core — SURVEY.md §2):
 
@@ -29,7 +30,7 @@ Supported command subset (the router core — SURVEY.md §2):
     keep $a $b ...
     drop if $col == 'value'               # simplified predicate form
     switch $field { case ~re~ { ... } default { ... } }
-    buffer <n>                            # sink batching → maxRecordsPerFile
+    buffer <n>                            # sink batching → maxRecordsPerFile (batch only)
     to file '<path template with {$field}>'
     to stdout | to tcp 'host:port' | to udp 'host:port' | to shell 'cmd'
 
@@ -58,6 +59,7 @@ from pyspark.sql import types as T
 from beholder_spark import sinks as sk
 from beholder_spark.operators import fields as fo
 from beholder_spark.operators import parse as po
+from beholder_spark.operators import route as ro
 
 # ---------------------------------------------------------------------------
 # Tokenizer: words, 'quoted', ~regex~, { } ;
@@ -433,22 +435,15 @@ def _compile_switch(df: DataFrame, cmd: Command, ctx: dict) -> DataFrame:
         if cmd.args and cmd.args[0].kind == "quoted"
         else F.col(_field(cmd.args[0])).cast("string")
     )
-    route_col: Column | None = None
-    route_names: list[str] = []
+    cases: list[tuple[Column, str]] = []
     case_blocks: list[tuple[str, list[Command]]] = []
     case_captures: list[tuple[str, str, list[str]]] = []  # (route, pattern, group names)
     default_block: list[Command] | None = None
-    n = 0
     for sub in cmd.block or []:
         if sub.name == "case":
             pat = sub.args[0].value
-            n += 1
-            name = f"case_{n}"
-            cond = subject.rlike(pat)
-            route_col = (
-                F.when(cond, name) if route_col is None else route_col.when(cond, name)
-            )
-            route_names.append(name)
+            name = f"case_{len(cases) + 1}"
+            cases.append((subject.rlike(pat), name))
             case_blocks.append((name, sub.block or []))
             groups = re.findall(r"\(\?<(\w+)>", pat)
             if groups:
@@ -457,11 +452,8 @@ def _compile_switch(df: DataFrame, cmd: Command, ctx: dict) -> DataFrame:
             default_block = sub.block or []
         else:
             raise ConfigError(f"unexpected {sub.name!r} inside switch")
-    default_name = "default" if default_block is not None else "_unmatched"
-    if route_col is None:
-        route_col = F.when(F.lit(False), "x")
-    route_col = route_col.otherwise(default_name)
-    df = df.withColumn("route", route_col)
+    default_name = "default" if default_block is not None else ro.UNMATCHED
+    df = df.withColumn("route", ro.route_expr(cases, default_name))
     # R2 case-capture: named groups in a case regex become fields on the
     # rows that matched that case (NULL elsewhere). Group index = position
     # among the pattern's capturing groups (named groups only, no
@@ -652,7 +644,8 @@ def _apply(df: DataFrame | None, cmd: Command, ctx: dict) -> DataFrame:
     if cmd.name == "buffer":
         # K5 sender buffer: Spark's analogue of sink batching is file
         # sizing — the CURRENT buffer value is captured by each later
-        # `to file` as maxRecordsPerFile (a visible effect, not a no-op)
+        # `to file` as maxRecordsPerFile (a visible effect, not a no-op;
+        # batch only — _check_stream_sinks rejects it in streaming)
         if not cmd.args:
             raise ConfigError("buffer requires a row count")
         ctx["buffer"] = int(cmd.args[0].value)
@@ -759,6 +752,29 @@ def run_config_pipeline(
             src.unpersist()
 
 
+def _check_stream_sinks(compiled: CompiledPipeline) -> None:
+    """Reject the sinks the streaming runner cannot honour: non-file sinks
+    are not replay-idempotent, and the manifested stages write without
+    ``maxRecordsPerFile``, so a ``buffer N`` before a ``to file`` would
+    be silently ignored. :func:`run_config_stream` and
+    :meth:`ConfigStreamSupervisor.reload` both call this, so reload's dry
+    validation rejects exactly what the runner rejects."""
+    bad = sorted({s["kind"] for s in compiled.sinks if s["kind"] != "file"})
+    if bad:
+        raise ConfigError(
+            "streaming fan-out supports `to file` sinks only (they land "
+            f"through the exactly-once manifested stages); found {bad} — "
+            "run live-network/stdout sinks from a downstream batch read "
+            "of the manifested table"
+        )
+    if any(s["max_records_per_file"] for s in compiled.sinks):
+        raise ConfigError(
+            "`buffer N` (maxRecordsPerFile) applies to batch `to file` sinks "
+            "only; the streaming runner writes without it — remove the "
+            "`buffer` command"
+        )
+
+
 def run_config_stream(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -789,8 +805,9 @@ def run_config_stream(
     order; the final frame stays at ``stage`` (the daemon contract).
     Non-file intermediate sinks (stdout/tcp/udp/shell) are rejected
     (checked, not silent): they are not replay-idempotent — route them
-    from a downstream batch read of the manifested stages. Returns the
-    started StreamingQuery.
+    from a downstream batch read of the manifested stages. A ``buffer N``
+    before a ``to file`` is rejected too (see :func:`_check_stream_sinks`).
+    Returns the started StreamingQuery.
     """
     from beholder_spark.plans import lineage as ln
     from beholder_spark.streaming import write_manifested_stream
@@ -799,17 +816,10 @@ def run_config_stream(
     # stream_df=None → SELF-SOURCING streaming config: the top-level
     # `from udp|tcp` builds the streaming scan itself
     final = compiled(stream_df, spark=spark)
+    _check_stream_sinks(compiled)
     if not compiled.sinks:
         return write_manifested_stream(
             final, out_root, stage, checkpoint_path, available_now=available_now
-        )
-    bad = sorted({s["kind"] for s in compiled.sinks if s["kind"] != "file"})
-    if bad:
-        raise ConfigError(
-            "streaming fan-out supports `to file` sinks only (they land "
-            f"through the exactly-once manifested stages); found {bad} — "
-            "run live-network/stdout sinks from a downstream batch read "
-            "of the manifested table"
         )
     if stream_df is None:
         source_stream = compiled.source_df
@@ -1023,12 +1033,7 @@ class ConfigStreamSupervisor:
             final.schema
             for s in compiled.sinks:
                 s["df"].schema  # sink slices analyze too
-            bad = sorted({s["kind"] for s in compiled.sinks if s["kind"] != "file"})
-            if bad:
-                raise ConfigError(
-                    "streaming fan-out supports `to file` sinks only; "
-                    f"found {bad} — remove them or route from a batch read"
-                )
+            _check_stream_sinks(compiled)
         except Exception as e:  # noqa: BLE001 — any compile/analysis failure
             self.last_error = e
             return False

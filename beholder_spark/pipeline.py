@@ -1,31 +1,20 @@
-"""Pipeline spec compiler — our analogue of Beholder's config language
-(SURVEY.md §3.2 lifecycle, entry point 1).
+"""The flagship job: Common-Crawl-style pages → parse → enrich → route →
+fan-out sink → per-sink aggregates (SURVEY.md §3.2 lifecycle, entry
+point 1).
 
-Beholder parses a config text into a command tree and interprets it per
-message; we compile a declarative stage list into DataFrame
-transformations and let Catalyst own the physical plan. One spec stage ≈
-one Beholder command:
-
-    spec = [
-      {"op": "parse_text", "src": "html", "dst": "text_out"},
-      {"op": "set_host", "url_col": "url"},
-      {"op": "enrich", "lookup": <df>, "on": "host"},
-      {"op": "set", "field": "tag", "template": "%s/%s", "cols": ["lang", "geo"]},
-      {"op": "keep", "fields": [...]},
-      {"op": "drop_when", "condition": <Column>},
-      {"op": "route", "cases": [(<Column>, "name"), ...]},
-    ]
-
-``compile_pipeline(df, spec)`` returns the transformed DataFrame; sinks
-and aggregates are separate stages because they are *actions* (see
-:func:`run_pages_pipeline` for the full parse→enrich→route→aggregate job
-with checkpoint/lineage).
+:func:`route_pages` is the narrow per-row chain, one Beholder command
+per call: ``parse`` (html → ``text_out`` via the Arrow pandas UDF, plus
+``parse_ok``), ``set $host`` from the url, ``enrich`` against the host
+lookup, then ``switch`` over :func:`default_routes`. Catalyst owns the
+physical plan. :func:`run_pages_pipeline` adds the actions around it:
+the checkpointed (day, route) sink write with lineage, and the
+aggregate. The config-language front end (:mod:`beholder_spark.config`)
+compiles its own commands onto the same operators.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,129 +25,6 @@ from beholder_spark.operators import fields as fo
 from beholder_spark.operators import route as ro
 from beholder_spark.operators.enrich import enrich_lookup
 from beholder_spark.plans import lineage as ln
-
-
-def _op_parse_text(df: DataFrame, st: dict) -> DataFrame:
-    """Beholder ``parse`` analogue for web pages: html bytes → text via
-    the Arrow pandas UDF, plus parse_ok (NULL text = unparseable)."""
-    out = df.withColumn(st.get("dst", "text_out"), extract_text_udf(F.col(st["src"])))
-    return out.withColumn("parse_ok", F.col(st.get("dst", "text_out")).isNotNull())
-
-
-OPS = {
-    "parse_text": _op_parse_text,
-    "set_host": lambda df, st: fo.set_host_from_url(df, st.get("field", "host"), st.get("url_col", "url")),
-    "set": lambda df, st: fo.set_template(df, st["field"], st["template"], *st["cols"]),
-    "set_replace": lambda df, st: fo.set_replace(df, st["field"], st["pattern"], st["replacement"], st.get("src")),
-    "set_date": lambda df, st: fo.set_date(df, st["field"], st["ts_col"], st.get("fmt", "yyyy-MM-dd'T'HH:mm:ssXXX")),
-    "keep": lambda df, st: fo.keep(df, *st["fields"]),
-    "unset": lambda df, st: fo.unset(df, *st["fields"]),
-    "drop_when": lambda df, st: fo.drop_when(df, st["condition"]),
-    "enrich": lambda df, st: enrich_lookup(df, st["lookup"], st["on"], st.get("how", "left")),
-    "route": lambda df, st: ro.switch(df, st["cases"], st.get("route_col", "route"), st.get("default", ro.UNMATCHED)),
-    "filter": lambda df, st: df.filter(st["condition"]),
-}
-
-
-# Row filters change WHICH rows survive, so they are never prunable;
-# `prune_spec` treats every enrich as row-semantic too.
-_ROW_OPS = {"drop_when", "filter"}
-
-
-def _stage_outputs(st: dict) -> set[str]:
-    op = st["op"]
-    if op == "parse_text":
-        return {st.get("dst", "text_out"), "parse_ok"}
-    if op == "set_host":
-        return {st.get("field", "host")}
-    if op in ("set", "set_replace", "set_date"):
-        return {st["field"]}
-    if op == "enrich":
-        return set(st["lookup"].columns) - {st["on"]}
-    if op == "route":
-        return {st.get("route_col", "route")}
-    return set()  # keep/unset reshape the schema, produce no values
-
-
-def _stage_deps(st: dict) -> set[str] | None:
-    """Input columns a stage reads; None = unknown (opaque Column
-    condition with no declared ``deps`` list)."""
-    if "deps" in st:
-        return set(st["deps"])
-    op = st["op"]
-    if op == "parse_text":
-        return {st["src"]}
-    if op == "set_host":
-        return {st.get("url_col", "url")}
-    if op == "set":
-        return set(st["cols"])
-    if op == "set_replace":
-        return {st.get("src") or st["field"]}
-    if op == "set_date":
-        return {st["ts_col"]}
-    if op == "enrich":
-        return {st["on"]}
-    if op in ("keep", "unset"):
-        return set()
-    return None  # route/drop_when/filter hold opaque Column conditions
-
-
-def prune_spec(spec: list[dict[str, Any]], needed: list[str] | set[str]) -> list[dict[str, Any]]:
-    """Stage-level dependency pruning — the optimizer pass Catalyst CANNOT
-    do for us: ``parse_ok = isnotnull(<pandas UDF>(html))`` makes the
-    Python UDF load-bearing in every downstream expression, so Catalyst
-    must run it even for aggregates that never touch a parse output.
-    This pass works at STAGE granularity instead: walking the spec
-    backwards from the caller's needed columns, a stage survives only if
-    it produces a needed column (or filters rows); everything else —
-    including the parse UDF — is dropped before Catalyst ever sees it.
-
-    Row-semantics stages (drop_when / filter / non-left enrich) are
-    always kept. If a kept stage's inputs can't be determined (an opaque
-    Column condition with no ``deps`` declared on the stage), pruning
-    bails out and returns the original spec — correctness is never
-    traded for the optimization.
-    """
-    need = set(needed)
-    kept: list[dict[str, Any]] = []
-    for st in reversed(spec):
-        # enrich is ALWAYS row-semantics here: even a left join multiplies
-        # rows when the lookup has duplicate keys, which would change
-        # aggregate results if pruned. (It's a cheap broadcast join — the
-        # expensive prunable stage is the parse UDF, which stays prunable.)
-        rowish = st["op"] in _ROW_OPS or st["op"] == "enrich"
-        outs = _stage_outputs(st)
-        if not (rowish or outs & need):
-            continue  # pruned: contributes no needed column, drops no row
-        deps = _stage_deps(st)
-        if deps is None:
-            return list(spec)  # can't prove safety — keep everything
-        kept.append(st)
-        need = (need | deps) if rowish else ((need - outs) | deps)
-    return list(reversed(kept))
-
-
-def compile_pipeline(
-    df: DataFrame, spec: list[dict[str, Any]], prune_for: list[str] | None = None
-) -> DataFrame:
-    """Compile a stage list into one DataFrame expression DAG.
-
-    All stages fuse into as few physical stages as Catalyst can manage —
-    typically ONE codegen'd projection + the pandas-UDF exchange-free
-    stage. No shuffles are introduced here by construction.
-
-    ``prune_for=[cols]`` applies :func:`prune_spec` first: the compiled
-    plan is guaranteed to produce those columns with values identical to
-    the full pipeline's, but stages (notably the parse UDF) that don't
-    feed them are never executed. Use for aggregate-only jobs over the
-    input side (counts per host/day, sampling decisions) that would
-    otherwise pay text extraction for columns they discard.
-    """
-    if prune_for is not None:
-        spec = prune_spec(spec, prune_for)
-    for st in spec:
-        df = OPS[st["op"]](df, st)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -178,15 +44,14 @@ def default_routes() -> list:
     ]
 
 
-def pages_spec(lookup: DataFrame) -> list[dict[str, Any]]:
-    return [
-        {"op": "parse_text", "src": "html", "dst": "text_out"},
-        {"op": "set_host", "url_col": "url"},
-        {"op": "enrich", "lookup": lookup, "on": "host"},
-        # deps declared so prune_spec can reason about the opaque case
-        # Columns (they read parse_ok / category / lang — see default_routes)
-        {"op": "route", "cases": default_routes(), "deps": ["parse_ok", "category", "lang"]},
-    ]
+def route_pages(pages: DataFrame, lookup: DataFrame) -> DataFrame:
+    """parse → set host → enrich → route: one narrow pass (the pandas UDF,
+    a broadcast join and codegen'd projections; no shuffle of its own)."""
+    df = pages.withColumn("text_out", extract_text_udf(F.col("html")))
+    df = df.withColumn("parse_ok", F.col("text_out").isNotNull())
+    df = fo.set_host_from_url(df, "host", "url")
+    df = enrich_lookup(df, lookup, "host", "left")
+    return ro.switch(df, default_routes())
 
 
 def run_pages_pipeline(
@@ -232,7 +97,7 @@ def run_pages_pipeline(
             )
             pages = pages.filter(~day_key.isin(*done))
 
-    routed = compile_pipeline(pages, pages_spec(lookup))
+    routed = route_pages(pages, lookup)
     routed = routed.withColumn("day", F.to_date(F.col("warc_ts")))
 
     # Sink hygiene at 100 TB: the routed table carries the pipeline's

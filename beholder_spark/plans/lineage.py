@@ -194,7 +194,6 @@ def run_stage(
     partition_col: str,
     extra_metrics: dict[str, F.Column] | None = None,
     partition_by: list[str] | None = None,
-    extra_lineage: dict[str, int] | None = None,
     rebalance: bool = True,
 ) -> DataFrame:
     """Execute one checkpointed stage: write pending partitions under a
@@ -250,14 +249,6 @@ def run_stage(
             spark, root, MANIFEST,
             [{"stage": stage, "partition": str(p), "run_id": run_id} for p in parts],
         )
-    # driver-side scalars computed OUTSIDE this stage's plan (e.g. the
-    # sender-buffer overflow count — K5: rows dropped before the write,
-    # invisible to observe). Always materialized (0 default) so new
-    # lineage files keep one schema; read_lineage merges older shapes.
-    # A REPLAYED batch (all rows already manifested → nothing newly
-    # committed) suppresses the count: its drops were recorded by the
-    # original attempt, and re-recording would double-count on sum.
-    overflow = int((extra_lineage or {}).get("dropped_overflow", 0)) if parts else 0
     _append(
         spark, root, LINEAGE,
         [{
@@ -266,7 +257,10 @@ def run_stage(
             "rows_out": int(got.get("rows_out", 0) or 0),
             "parse_failures": int(got.get("parse_failures", 0) or 0),
             "dropped": int(got.get("dropped", 0) or 0),
-            "dropped_overflow": overflow,
+            # always 0 (no stage drops rows before its write); kept so
+            # LINEAGE_SCHEMA, `from internal-log` / `parse beholder-stats`
+            # and existing roots still read the column
+            "dropped_overflow": 0,
             "wall_ms": wall_ms,
             "n_partitions": len(parts),
         }],

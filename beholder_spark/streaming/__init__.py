@@ -65,8 +65,6 @@ def write_manifested_stream(
     stage: str,
     checkpoint_path: str,
     available_now: bool = True,
-    buffer_rows: int | None = None,
-    order_col: str | None = None,
 ):
     """EXACTLY-ONCE streaming sink: foreachBatch + the manifest machinery
     of :mod:`beholder_spark.plans.lineage`, keyed by batch CONTENT.
@@ -89,46 +87,15 @@ def write_manifested_stream(
     key on ``_batch=b<id>`` and the guarantee degrades to the original
     one: checkpoint loss is only replay-safe while the source is
     unchanged.
-
-    Backpressure (K5 ``buffer N`` drop semantics): ``buffer_rows`` caps
-    each micro-batch at that many rows — the buffer fills in
-    ``order_col`` order and overflow (the latest arrivals) is DROPPED
-    and COUNTED in ``_lineage.dropped_overflow``, Beholder's counted
-    drop-on-overflow contract. ``order_col`` must be a unique key for a
-    deterministic survivor set. Pair with a source trigger limit
-    (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``) to bound batch
-    size — that is Spark's native backpressure; the buffer bound is the
-    LOSSY mode on top. Counting the overflow costs one extra pass over
-    the (bounded) micro-batch, and a lossy sink is inherently weaker
-    than exactly-once: after checkpoint loss the replayed batch may
-    regroup rows and keep a different survivor set.
     """
     from beholder_spark.plans import lineage as ln
 
-    if buffer_rows is not None and order_col is None:
-        raise ValueError("buffer_rows requires order_col (deterministic survivor set)")
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # key FIRST: batch_key_col must see the original file scan —
-        # evaluating it above the orderBy().limit() exchange would read
-        # input_file_name() as '' and degrade every key to b<batch_id>
-        # (the checkpoint-loss silent-drop class; see batch_key_col)
-        b = batch_df.withColumn("_batch", batch_key_col(batch_id))
-        dropped = 0
-        if buffer_rows is not None:
-            n_in = b.count()
-            if n_in > buffer_rows:
-                # sort+limit compiles to TakeOrderedAndProject — per-
-                # partition top-N then merge, never a full global sort
-                b = b.orderBy(order_col).limit(buffer_rows)
-                dropped = n_in - buffer_rows
         # no rebalance: each _batch directory is one source file, which
         # one scan task reads whole (below spark.sql.files.maxPartitionBytes)
         # — a shuffle would cost time and save no file
-        ln.run_stage(
-            b.sparkSession, out_root, stage, b, partition_col="_batch",
-            extra_lineage={"dropped_overflow": dropped}, rebalance=False,
-        )
+        b = batch_df.withColumn("_batch", batch_key_col(batch_id))
+        ln.run_stage(b.sparkSession, out_root, stage, b, partition_col="_batch", rebalance=False)
 
     w = (
         stream.writeStream.foreachBatch(write_batch)

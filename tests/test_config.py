@@ -567,6 +567,13 @@ def test_config_streaming_daemon_mode(spark, tmp_path):
         C.run_config_stream(
             spark, stream, "to stdout;", str(tmp_path / "out2"), str(tmp_path / "ck2")
         )
+    # `buffer N` (maxRecordsPerFile) is batch-only: the manifested stream
+    # stages write without it, so the runner rejects it instead of ignoring it
+    with pytest.raises(C.ConfigError, match="buffer"):
+        C.run_config_stream(
+            spark, stream, "buffer 10; to file 'side';", str(tmp_path / "out3"),
+            str(tmp_path / "ck3"),
+        )
 
 
 def test_config_from_udp_daemon(spark, tmp_path):
@@ -694,6 +701,11 @@ def test_config_hot_reload_swaps_pipeline(spark, tmp_path):
         cfg.write_text("parse syslog keep-unparsed; to stdout;")
         assert sup.reload() is False
         assert isinstance(sup.last_error, C.ConfigError)
+        assert sup.generation == gen and sup.query.isActive
+        # same for a buffered file sink: the runner rejects `buffer N`
+        cfg.write_text("parse syslog keep-unparsed; buffer 10; to file 'side';")
+        assert sup.reload() is False
+        assert isinstance(sup.last_error, C.ConfigError) and "buffer" in str(sup.last_error)
         assert sup.generation == gen and sup.query.isActive
 
         # good rewrite: atomic swap on the SAME checkpoint + manifested sink

@@ -1,8 +1,8 @@
-"""Guard: every public top-level function in the package has a caller
-outside ``tests/``. References are read from the AST (names, attributes,
-``from … import``), so a mention in a docstring or comment does not count
-as a use. Decorated defs are skipped: registered queries are reached
-through ``QUERIES``."""
+"""Guard: every public top-level function in the package, and every public
+method of a public class, has a caller outside ``tests/``. References are
+read from the AST (names, attributes, ``from … import``), so a mention in
+a docstring or comment does not count as a use. Decorated defs are
+skipped: registered queries are reached through ``QUERIES``."""
 
 from __future__ import annotations
 
@@ -29,18 +29,29 @@ def _refs(tree: ast.AST) -> set[str]:
     return out
 
 
+def _public(body: list[ast.stmt], kind: type) -> list:
+    return [n for n in body if isinstance(n, kind) and not n.name.startswith("_")]
+
+
 def test_no_def_is_reached_only_by_tests():
     refs: set[str] = set()
-    defs: set[tuple[str, str]] = set()
+    defs: set[tuple[str, str]] = set()  # (qualified name, name a caller uses)
     for f in sorted({p for g in USERS for p in ROOT.glob(g)}):
         tree = ast.parse(f.read_text(), str(f))
         refs |= _refs(tree)
         if f.is_relative_to(ROOT / "beholder_spark"):
             mod = ".".join(f.relative_to(ROOT / "beholder_spark").with_suffix("").parts)
+            mod = mod.removesuffix(".__init__")
             defs |= {
-                (mod.removesuffix(".__init__"), n.name)
-                for n in tree.body
-                if isinstance(n, ast.FunctionDef) and not n.decorator_list and not n.name.startswith("_")
+                (f"{mod}.{n.name}", n.name)
+                for n in _public(tree.body, ast.FunctionDef)
+                if not n.decorator_list
             }
-    dead = {f"{mod}.{name}" for mod, name in defs if name not in refs}
+            defs |= {
+                (f"{mod}.{c.name}.{m.name}", m.name)
+                for c in _public(tree.body, ast.ClassDef)
+                for m in _public(c.body, ast.FunctionDef)
+                if not m.decorator_list
+            }
+    dead = {qual for qual, name in defs if name not in refs}
     assert dead == set(ALLOWED)

@@ -56,53 +56,13 @@ def test_enrich_is_broadcast_join(spark, fixture_dir):
 def test_routed_chain_has_no_exchange(spark, fixture_dir):
     """parse→enrich→route is ONE narrow pipeline: the only allowed
     Exchange is the broadcast of the lookup table."""
-    from beholder_spark.pipeline import compile_pipeline, pages_spec
+    from beholder_spark.pipeline import route_pages
 
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     lookup = spark.read.parquet(f"{fixture_dir}/host_lookup.parquet")
-    routed = compile_pipeline(pages, pages_spec(lookup))
-    plan = _plan(routed)
+    plan = _plan(route_pages(pages, lookup))
     assert "BroadcastExchange" in plan
     assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan
-
-
-def test_prune_spec_drops_parse_udf_for_preparse_aggregates(spark, fixture_dir):
-    """Catalyst can't prune the parse UDF (parse_ok makes it load-bearing);
-    the stage compiler's prune_spec must — an aggregate over (host,
-    category) never pays text extraction."""
-    from beholder_spark.pipeline import compile_pipeline, pages_spec
-
-    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
-    lookup = spark.read.parquet(f"{fixture_dir}/host_lookup.parquet")
-    pruned = compile_pipeline(pages, pages_spec(lookup), prune_for=["host", "category"])
-    plan = _plan(pruned.groupBy("host", "category").count())
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # values must be identical to the full pipeline's on the needed columns
-    full = compile_pipeline(pages, pages_spec(lookup))
-    a = pruned.groupBy("host", "category").count()
-    b = full.groupBy("host", "category").count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_prune_spec_keeps_parse_when_route_needed(spark, fixture_dir):
-    """Asking for the route column keeps the whole chain (route deps are
-    declared on the stage): the UDF stays, nothing is wrongly pruned."""
-    from beholder_spark.pipeline import compile_pipeline, pages_spec
-
-    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
-    lookup = spark.read.parquet(f"{fixture_dir}/host_lookup.parquet")
-    routed = compile_pipeline(pages, pages_spec(lookup), prune_for=["route"])
-    assert "ArrowEvalPython" in _plan(routed.select("route"))
-
-
-def test_prune_spec_bails_on_unknown_deps(spark, fixture_dir):
-    """A row-filter stage with an opaque condition and no declared deps
-    must disable pruning entirely (correctness over optimization)."""
-    from beholder_spark.pipeline import prune_spec, pages_spec
-
-    lookup = spark.read.parquet(f"{fixture_dir}/host_lookup.parquet")
-    spec = pages_spec(lookup) + [{"op": "drop_when", "condition": F.col("lang") == "xx"}]
-    assert prune_spec(spec, ["host"]) == spec
 
 
 def test_salted_count_is_two_phase(spark, fixture_dir):

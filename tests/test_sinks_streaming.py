@@ -85,45 +85,7 @@ def test_manifested_stream_checkpoint_loss_with_grown_source(spark, tmp_path):
     again = ln.read_stage(spark, out_root, "events", "_batch")
     assert again.count() == 150  # new rows appended, old rows not duplicated
     assert again.select("id").distinct().count() == 150
-
-
-def test_manifested_stream_counts_overflow_drops(spark, tmp_path):
-    """K5 counted drop-on-overflow: under an artificially throttled
-    trigger (1 file/micro-batch) a `buffer 30` sink keeps the earliest 30
-    rows of each batch, DROPS the overflow, and COUNTS it in
-    `_lineage.dropped_overflow` — Beholder's backpressure contract."""
-    from beholder_spark import streaming as st
-    from beholder_spark.plans import lineage as ln
-
-    src_dir = str(tmp_path / "src")
-    for lo in (0, 50, 100):
-        spark.createDataFrame([(lo + i, f"k{i}") for i in range(50)], ["id", "k"]).coalesce(
-            1
-        ).write.mode("append").parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema("id long, k string")
-        .option("maxFilesPerTrigger", 1)  # native backpressure: bound intake
-        .parquet(src_dir)
-    )
-    q = st.write_manifested_stream(
-        stream, str(tmp_path / "out"), "events", str(tmp_path / "ckpt"),
-        buffer_rows=30, order_col="id",
-    )
-    q.awaitTermination(120)
-
-    got = ln.read_stage(spark, str(tmp_path / "out"), "events", "_batch")
-    kept = sorted(r.id for r in got.select("id").collect())
-    # deterministic survivor set: the earliest 30 ids of each 50-row batch
-    assert kept == [lo + i for lo in (0, 50, 100) for i in range(30)]
-
-    lin = ln.read_lineage(spark, str(tmp_path / "out")).filter("stage = 'events'")
-    rows = lin.select("rows_out", "dropped_overflow").collect()
-    assert sorted((r.rows_out, r.dropped_overflow) for r in rows) == [(30, 20)] * 3
-
-    # regression (r4 review): the overflow path must key BEFORE the
-    # orderBy().limit() exchange — file-keyed _batch values, never the
-    # b<batch_id> degradation that silently drops rows on
-    # checkpoint-loss replay
-    keys = [r._batch for r in got.select("_batch").distinct().collect()]
+    # file-keyed _batch values, never the b<batch_id> fallback that would
+    # skip the replayed batch 0 wholesale (see streaming.batch_key_col)
+    keys = [r._batch for r in again.select("_batch").distinct().collect()]
     assert keys and all(k.startswith("f") for k in keys), keys
