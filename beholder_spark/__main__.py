@@ -36,15 +36,10 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="run the config as a LONG-RUNNING stream (`beholder -c conf` parity): "
         "`from udp` configs get the datagram bridge; otherwise --pages is "
-        "tailed as a file stream. SIGHUP or editing the config hot-reloads.",
+        "tailed as a file stream. SIGHUP or editing the config hot-reloads; "
+        "SIGTERM drains and exits 0.",
     )
     p.add_argument("--checkpoint", help="streaming checkpoint dir (daemon mode; default <out>/_checkpoint)")
-    p.add_argument(
-        "--daemon-seconds",
-        type=float,
-        default=None,
-        help="stop the daemon after N seconds (default: run until Ctrl-C/stop)",
-    )
     args = p.parse_args(argv)
 
     from beholder_spark.session import get_spark, ship_package
@@ -91,9 +86,16 @@ def _run_daemon(spark, p, args) -> int:
     All run under the hot-reload supervisor (SIGHUP / config-mtime swap
     of the pipeline STAGES — the listeners stay bound across reloads;
     changing ports/spools needs a restart, the spool directory being the
-    stable handoff point)."""
+    stable handoff point).
+
+    SIGTERM is the one clean stop: the reload watcher is joined (no
+    reload can restart a query), the bridges stop and flush their
+    buffers into the spool, the query processes everything available,
+    and the daemon exits 0. Any other end — a failed bridge, a query
+    that failed or was stopped from outside — raises (exit non-zero)."""
     import os
-    import time
+    import signal
+    import threading
 
     from beholder_spark import config as C
 
@@ -102,19 +104,14 @@ def _run_daemon(spark, p, args) -> int:
         text = f.read()
     cmds = C.parse_config(text)
     first_from = next((c for c in cmds if c.name == "from"), None)
-    deadline = time.monotonic() + args.daemon_seconds if args.daemon_seconds else None
 
-    bridges = []
     probe = C.compile_config(text)
     if first_from is not None and first_from.args and first_from.args[0].value in ("udp", "tcp"):
         probe(None, spark=spark)  # records the ingest declarations
-    if probe.udp_ingest or probe.tcp_frame_ingest:
-        # start the listeners once, from the declared specs; the
+    if probe.ingest:
+        # the listeners start once, from the declared specs; the
         # supervisor's self-sourcing recompiles re-tail the same spools
-        bridges = C.start_ingest_bridges(probe)
         stream_factory = lambda: None  # noqa: E731 — self-sourcing config
-        kind = "udp" if probe.udp_ingest else "tcp syslog-frame"
-        banner = f"daemon: listening {kind} port {bridges[0].port} → {args.out}"
     else:
         if not args.pages:
             p.error(
@@ -123,32 +120,41 @@ def _run_daemon(spark, p, args) -> int:
             )
         schema = spark.read.parquet(args.pages).schema
         stream_factory = lambda: spark.readStream.schema(schema).parquet(args.pages)  # noqa: E731
-        banner = f"daemon: streaming {args.pages} → {args.out}"
 
+    term: list[int] = []  # the handler only flags; the loop below drains
+    prev = None  # Python installs signal handlers from the main thread only
+    if threading.current_thread() is threading.main_thread():
+        prev = signal.signal(signal.SIGTERM, lambda *_: term.append(1))
     sup = C.ConfigStreamSupervisor(spark, args.config, stream_factory, args.out, ckpt)
+    bridges = []
     try:
+        for cls, kwargs in probe.ingest:
+            b = cls(**kwargs, flush_secs=0.2)
+            b.start()
+            bridges.append(b)
         sup.start()
         sup.install_sighup()
         sup.watch()
-        print(f"{banner} (SIGHUP/config-edit reloads)", flush=True)
-        while deadline is None or time.monotonic() < deadline:
-            for b in bridges:
-                b.raise_if_failed()  # dead listener → exit non-zero, not idle
-            q = sup.query
-            gen = sup.generation
-            q.awaitTermination(2)
-            if not q.isActive:
-                # a reload may be mid-swap (old query stopped, new one
-                # not yet assigned): give it a grace period and only
-                # exit if no new generation appeared
-                time.sleep(2)
-                if sup.generation == gen and not sup.query.isActive:
-                    break
+        src = ", ".join(f"{type(b).__name__} port {b.port}" for b in bridges) or args.pages
+        print(f"daemon: {src} → {args.out} (SIGHUP/config edit reloads, SIGTERM stops)", flush=True)
+        parts = (*bridges, sup)
+        while not term:
+            for x in parts:
+                x.raise_if_failed()  # dead listener or query → exit non-zero
+            sup.query.awaitTermination(1)
+        sup.stop_watching()
+        for b in bridges:
+            b.stop()  # flushes the buffer into the spool
+        sup.query.processAllAvailable()
+        for x in parts:
+            x.raise_if_failed()  # a failed last flush or a dead query is no clean stop
+        return 0
     finally:
         sup.stop()
         for b in bridges:
             b.stop()
-    return 0
+        if prev is not None:
+            signal.signal(signal.SIGTERM, prev)
 
 
 if __name__ == "__main__":

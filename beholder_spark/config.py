@@ -18,6 +18,7 @@ Supported command subset (the router core — SURVEY.md §2):
                                           # S2 RFC6587 octet-counted framing
     from internal-log '<root>'            # S4 own lineage table as messages
     parse syslog [keep-unparsed]          # on $payload
+    parse fieldpack [$a ...] [keep-unparsed]  # P4 binary field map (SPEC in operators/parse.py)
     parse beholder-stats                  # P6 typed counters from internal-log
     parse json $field key:type ...        # declared schema
     parse regexp ~pattern~ $name:idx ...  # named groups
@@ -30,6 +31,9 @@ Supported command subset (the router core — SURVEY.md §2):
     keep $a $b ...
     drop if $col == 'value'               # simplified predicate form
     switch $field { case ~re~ { ... } default { ... } }
+    join { from … ; ... }                 # C3 union a subflow into this flow
+    tee { ... }                           # C2 side block: its sinks only
+    flow { ... }                          # inline block of commands
     buffer <n>                            # sink batching → maxRecordsPerFile (batch only)
     to file '<path template with {$field}>'
     to stdout | to tcp 'host:port' | to udp 'host:port' | to shell 'cmd'
@@ -50,6 +54,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -229,14 +234,12 @@ class CompiledPipeline:
     # when the caller supplied the source) — run_config_pipeline persists
     # it so K sinks cost one source computation, same as the caller-df path
     source_df: DataFrame | None = None
-    # `from udp` declarations of the last invocation: [{"port", "spool"}].
-    # The Spark plan tails the spool; the datagram listener itself is a
-    # driver-side bridge the daemon runner starts (Spark has no UDP source)
-    udp_ingest: list[dict] = field(default_factory=list)
-    # `from tcp … as syslog-frame` declarations: [{"host", "port", "spool"}].
-    # Same bridge pattern as udp_ingest (TcpSyslogFrameBridge), needed
-    # because RFC6587 frames may embed newlines the socket source can't carry
-    tcp_frame_ingest: list[dict] = field(default_factory=list)
+    # listener bridges the last invocation declared, as (bridge class,
+    # kwargs): `from udp` → UdpSpoolBridge, `from tcp … as syslog-frame` →
+    # TcpSyslogFrameBridge. The Spark plan tails each spool; `--daemon`
+    # starts the listeners driver-side (Spark has no UDP source, and
+    # RFC6587 frames may embed newlines the socket source can't carry)
+    ingest: list[tuple[type, dict]] = field(default_factory=list)
 
     def __call__(self, df: DataFrame | None = None, spark: SparkSession | None = None) -> DataFrame:
         return self.transform(df, spark)
@@ -289,8 +292,8 @@ def _compile_set(df: DataFrame, cmd: Command) -> DataFrame:
 def _compile_from(spark: SparkSession, cmd: Command, ctx: dict | None = None) -> DataFrame:
     """S1-S5 sources: parquet/text scans (batch), timer/infinity
     generators, and the LIVE listeners (udp/tcp → streaming DataFrames,
-    usable only under :func:`run_config_stream` /
-    :func:`run_config_udp_daemon`)."""
+    usable only under :func:`run_config_stream`, which ``--daemon``
+    runs)."""
     from beholder_spark import sources
 
     kind = cmd.args[0].value
@@ -314,9 +317,8 @@ def _compile_from(spark: SparkSession, cmd: Command, ctx: dict | None = None) ->
         # S1 `from udp <port> spool '<dir>'` — Beholder's primary
         # transport. Compiles to the spool-tailing file STREAM
         # (sources.from_udp_stream); the datagram listener is a driver-
-        # side UdpSpoolBridge recorded here and started by the daemon
-        # runner. Port 0 = ephemeral (tests); the bridge reports the
-        # bound port.
+        # side UdpSpoolBridge recorded here and started by `--daemon`.
+        # Port 0 = ephemeral (tests); the bridge reports the bound port.
         if len(cmd.args) < 4 or cmd.args[2].value != "spool":
             raise ConfigError("`from udp` requires: from udp <port> spool '<dir>'")
         port = int(cmd.args[1].value)
@@ -324,7 +326,9 @@ def _compile_from(spark: SparkSession, cmd: Command, ctx: dict | None = None) ->
             raise ConfigError(f"udp port out of range: {port}")
         spool = cmd.args[3].value
         if ctx is not None:
-            ctx.setdefault("udp_ingest", []).append({"port": port, "spool": spool})
+            ctx.setdefault("ingest", []).append(
+                (sources.UdpSpoolBridge, {"spool_dir": spool, "port": port})
+            )
         return sources.from_udp_stream(spark, spool, source_tag=f"udp://0.0.0.0:{port}")
     if kind == "tcp":
         # S2 live listener. Default/`as newline-terminated`: socket
@@ -352,8 +356,8 @@ def _compile_from(spark: SparkSession, cmd: Command, ctx: dict | None = None) ->
                 )
             spool = rest[3]
             if ctx is not None:
-                ctx.setdefault("tcp_frame_ingest", []).append(
-                    {"host": host, "port": port, "spool": spool}
+                ctx.setdefault("ingest", []).append(
+                    (sources.TcpSyslogFrameBridge, {"spool_dir": spool, "host": host, "port": port})
                 )
             return sources.from_tcp_frame_stream(
                 spark, spool, source_tag=f"tcp://{host}:{port}"
@@ -593,8 +597,7 @@ def compile_config(text: str) -> CompiledPipeline:
         if out is None:
             raise ConfigError("config has no source: pass a DataFrame or start with `from …`")
         compiled.source_df = ctx.get("source_df")
-        compiled.udp_ingest = ctx.get("udp_ingest", [])
-        compiled.tcp_frame_ingest = ctx.get("tcp_frame_ingest", [])
+        compiled.ingest = ctx.get("ingest", [])
         return out
 
     compiled.transform = transform
@@ -698,7 +701,7 @@ def run_config_pipeline(
             # "streaming sources must be executed with writeStream" later
             raise ConfigError(
                 "`from udp` / `from tcp` are streaming sources — run this "
-                "config via run_config_stream or run_config_udp_daemon"
+                "config with `--daemon` (or run_config_stream)"
             )
         # persist the config-built scan so K sinks cost ONE source
         # computation — the same economics as the caller-df branch below
@@ -777,7 +780,7 @@ def _check_stream_sinks(compiled: CompiledPipeline) -> None:
 
 def run_config_stream(
     spark: SparkSession,
-    stream_df: DataFrame,
+    stream_df: DataFrame | None,
     config_text: str,
     out_root: str,
     checkpoint_path: str,
@@ -785,46 +788,45 @@ def run_config_stream(
     available_now: bool = True,
 ):
     """Run a Beholder config as a LONG-RUNNING STREAM — the daemon
-    execution mode the reference actually ships as. The SAME compiled
-    command tree transforms the streaming DataFrame (every stage is a
+    execution mode the reference actually ships as (``--daemon``). The
+    SAME compiled command tree transforms the stream (every stage is a
     column expression or when()-chain — mode-agnostic by construction),
-    and the result lands through the EXACTLY-ONCE manifested sink
-    (:func:`beholder_spark.streaming.write_manifested_stream`), so a
-    replayed micro-batch never duplicates rows even across
-    streaming-checkpoint loss.
+    and ONE foreachBatch writer lands each micro-batch through the batch
+    engine's manifest machinery (:func:`beholder_spark.plans.lineage.run_stage`)
+    EXACTLY ONCE, even across streaming-checkpoint loss.
 
-    Multi-sink configs (``tee { to file '…' }`` + the main flow —
-    Beholder's bread-and-butter fan-out) run as ONE streaming query with
-    ONE checkpoint: each micro-batch re-runs the compiled command tree
-    in BATCH mode (the top-level ``from`` resolves to the batch slice),
-    and every ``to file`` sink plus the final frame lands through the
-    same file-keyed manifest machinery as
-    :func:`beholder_spark.streaming.write_manifested_stream` — exactly
-    once PER SINK, surviving checkpoint loss and supervisor config
-    reloads. Sink stages are ``sink_0 … sink_{K-1}`` in declaration
-    order; the final frame stays at ``stage`` (the daemon contract).
-    Non-file intermediate sinks (stdout/tcp/udp/shell) are rejected
-    (checked, not silent): they are not replay-idempotent — route them
-    from a downstream batch read of the manifested stages. A ``buffer N``
-    before a ``to file`` is rejected too (see :func:`_check_stream_sinks`).
-    Returns the started StreamingQuery.
+    Exactly-once survives a lost checkpoint because each row's manifest
+    partition is ``_batch=f<md5(source file)>``
+    (:func:`beholder_spark.streaming.batch_key_col`), NOT the micro-batch
+    id: after checkpoint loss batch ids restart at 0, and if the source
+    GREW since the original run the replayed batch 0 holds old+new files.
+    File-keyed partitions skip exactly the already-manifested files and
+    append exactly the new ones; a batch that crashed mid-write leaves
+    only an invisible orphan run dir. When the batch plan erases file
+    provenance (non-file sources), rows key on ``_batch=b<id>`` and
+    checkpoint loss is only replay-safe while the source is unchanged.
+
+    Without ``to file`` sinks the compiled frame itself is streamed and
+    lands at ``stage``. With sinks (``tee { to file '…' }`` + the main
+    flow — Beholder's bread-and-butter fan-out) the SOURCE is streamed
+    with ONE checkpoint, and each micro-batch re-runs the command tree in
+    BATCH mode: every sink lands at ``sink_0 … sink_{K-1}`` (declaration
+    order, its path fields as partition columns) and the final frame at
+    ``stage`` — exactly once PER SINK, surviving checkpoint loss and
+    supervisor config reloads. Non-file sinks (stdout/tcp/udp/shell) and
+    ``buffer N`` are rejected (see :func:`_check_stream_sinks`).
+    ``stream_df=None`` makes the config self-sourcing (its top-level
+    ``from udp|tcp`` builds the stream). Returns the started
+    StreamingQuery.
     """
     from beholder_spark.plans import lineage as ln
-    from beholder_spark.streaming import write_manifested_stream
+    from beholder_spark.streaming import batch_key_col
 
     compiled = compile_config(config_text)
-    # stream_df=None → SELF-SOURCING streaming config: the top-level
-    # `from udp|tcp` builds the streaming scan itself
     final = compiled(stream_df, spark=spark)
     _check_stream_sinks(compiled)
-    if not compiled.sinks:
-        return write_manifested_stream(
-            final, out_root, stage, checkpoint_path, available_now=available_now
-        )
-    if stream_df is None:
-        source_stream = compiled.source_df
-    else:
-        source_stream = stream_df
+    fan_out = bool(compiled.sinks)
+    source = stream_df if stream_df is not None else compiled.source_df
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Deliberately NO persist of the batch slice: caching it severs
@@ -836,106 +838,35 @@ def run_config_stream(
         # files' rows. K sinks therefore recompute their transform
         # suffixes from the (small) spool micro-batch: correctness over
         # cached-once economics.
-        from beholder_spark.streaming import batch_key_col
-
-        batch_final = compiled(batch_df)  # recaptures sinks in batch mode
+        if fan_out:
+            batch_final = compiled(batch_df)  # recaptures the sinks in batch mode
+            frames = [
+                (f"sink_{i}", s["df"], s["partition_fields"]) for i, s in enumerate(compiled.sinks)
+            ]
+            frames.append((stage, batch_final, []))
+        else:
+            frames = [(stage, batch_df, [])]
         key = batch_key_col(batch_id)
-        frames = [(f"sink_{i}", s) for i, s in enumerate(compiled.sinks)]
-        frames.append((stage, {"df": batch_final, "partition_fields": []}))
-        for st, spec in frames:
-            frame = spec["df"]
-            extra = [f for f in spec.get("partition_fields", []) if f in frame.columns]
+        for st, frame, fields in frames:
             ln.run_stage(
                 frame.sparkSession,
                 out_root,
                 st,
                 frame.withColumn("_batch", key),
                 partition_col="_batch",
-                partition_by=extra,
-                # file-keyed directories: one scan task each already (see
-                # write_manifested_stream), so no rebalance shuffle
+                partition_by=[f for f in fields if f in frame.columns],
+                # no rebalance: each _batch directory is one source file,
+                # which one scan task reads whole — a shuffle would cost
+                # time and save no file
                 rebalance=False,
             )
 
-    w = source_stream.writeStream.foreachBatch(write_batch).option(
+    w = (source if fan_out else final).writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path
     )
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def start_ingest_bridges(compiled) -> list:
-    """Start one listener bridge per ingest declaration the compiled
-    config recorded: a :class:`beholder_spark.sources.UdpSpoolBridge` per
-    ``from udp`` and a :class:`beholder_spark.sources.TcpSyslogFrameBridge`
-    per ``from tcp … as syslog-frame``. If a later bridge fails to start,
-    the ones already started are stopped before the error propagates."""
-    from beholder_spark.sources import TcpSyslogFrameBridge, UdpSpoolBridge
-
-    bridges = []
-    try:
-        for spec in compiled.udp_ingest:
-            b = UdpSpoolBridge(spec["spool"], port=spec["port"], flush_secs=0.2)
-            b.start()
-            bridges.append(b)
-        for spec in compiled.tcp_frame_ingest:
-            b = TcpSyslogFrameBridge(
-                spec["spool"], host=spec["host"], port=spec["port"], flush_secs=0.2
-            )
-            b.start()
-            bridges.append(b)
-    except Exception:
-        for b in bridges:
-            b.stop()
-        raise
-    return bridges
-
-
-def run_config_udp_daemon(
-    spark: SparkSession,
-    config_text: str,
-    out_root: str,
-    checkpoint_path: str,
-    stage: str = "config_sink",
-):
-    """``beholder -c config`` parity for ``from udp`` — the reference's
-    primary deployment shape (syslog-over-UDP listener daemon). Starts
-    one :class:`beholder_spark.sources.UdpSpoolBridge` per ``from udp``
-    declaration (datagram listener → atomic spool files) and one
-    :class:`beholder_spark.sources.TcpSyslogFrameBridge` per
-    ``from tcp … as syslog-frame`` declaration (RFC6587 octet-counted
-    listener → JSON-lines spool), then runs the config's pipeline as a
-    continuous stream tailing those spools into the exactly-once
-    manifested sink.
-
-    Returns ``(StreamingQuery, [UdpSpoolBridge, ...])`` — the caller
-    owns shutdown (``q.stop()``; ``bridge.stop()``). Bridges report
-    their bound port (``bridge.port``), which is how ``from udp 0``
-    (ephemeral, tests) learns the real port. At cluster scale the
-    bridges run on edge nodes (or are replaced by Kafka topics); the
-    Spark side of the plan is identical either way.
-    """
-    compiled = compile_config(config_text)
-    compiled(None, spark=spark)  # records the ingest declarations
-    if not compiled.udp_ingest and not compiled.tcp_frame_ingest:
-        raise ConfigError(
-            "run_config_udp_daemon requires a `from udp <port> spool '<dir>'` "
-            "or `from tcp <host> <port> as syslog-frame spool '<dir>'` source"
-        )
-    bridges = start_ingest_bridges(compiled)
-    try:
-        # the self-sourcing streaming runner handles both the single-sink
-        # (final frame → manifested `stage`) and the tee fan-out shapes
-        q = run_config_stream(
-            spark, None, config_text, out_root, checkpoint_path,
-            stage=stage, available_now=False,
-        )
-    except Exception:
-        for b in bridges:
-            b.stop()
-        raise
-    return q, bridges
 
 
 class ConfigStreamSupervisor:
@@ -990,6 +921,10 @@ class ConfigStreamSupervisor:
         self.last_error: Exception | None = None
         self._hup = False
         self._watch_stop = None  # threading.Event when watching
+        self._watcher = None
+        # held across a reload's stop → restart, so raise_if_failed never
+        # mistakes a swap in progress for a dead query
+        self._swap = threading.Lock()
 
     def start(self) -> "ConfigStreamSupervisor":
         with open(self.config_path, encoding="utf-8") as f:
@@ -1039,17 +974,32 @@ class ConfigStreamSupervisor:
             return False
         self.last_error = None
         old_text = self.config_text
-        self.query.stop()  # micro-batch boundary; manifested sink is swap-safe
-        try:
-            self._start_query(text)
-        except Exception as e:  # noqa: BLE001 — dry-validation gap
-            # the old query is already stopped: roll back to the old
-            # pipeline rather than leaving the daemon dead (if even the
-            # rollback fails, that is genuinely fatal — let it raise)
-            self.last_error = e
-            self._start_query(old_text)
-            return False
+        with self._swap:
+            self.query.stop()  # micro-batch boundary; manifested sink is swap-safe
+            try:
+                self._start_query(text)
+            except Exception as e:  # noqa: BLE001 — dry-validation gap
+                # the old query is already stopped: roll back to the old
+                # pipeline rather than leaving the daemon dead (if even the
+                # rollback fails, that is genuinely fatal: it raises, and
+                # raise_if_failed reports the stopped query)
+                self.last_error = e
+                self._start_query(old_text)
+                return False
         return True
+
+    def raise_if_failed(self) -> None:
+        """Raise RuntimeError if the query is inactive outside a reload
+        swap — it failed, was stopped from outside, or a reload's
+        rollback failed — so the daemon exits non-zero instead of idling
+        healthy (the bridges' :meth:`raise_if_failed` contract)."""
+        with self._swap:
+            if not self.query.isActive:
+                raise RuntimeError(
+                    f"streaming query stopped outside a reload "
+                    f"(generation {self.generation}, last_error={self.last_error!r}, "
+                    f"exception={self.query.exception()})"
+                )
 
     def install_sighup(self) -> bool:
         """Register the real SIGHUP handler (driver main thread only —
@@ -1067,9 +1017,6 @@ class ConfigStreamSupervisor:
 
     def watch(self, poll_secs: float = 1.0) -> None:
         """Start the reload watcher: polls config mtime + the SIGHUP flag."""
-        import threading
-        import time as _time
-
         self._watch_stop = threading.Event()
         mtime = os.path.getmtime(self.config_path)
 
@@ -1090,10 +1037,17 @@ class ConfigStreamSupervisor:
                     mtime = m
                     self.reload()
 
-        threading.Thread(target=loop, daemon=True).start()
+        self._watcher = threading.Thread(target=loop, daemon=True)
+        self._watcher.start()
+
+    def stop_watching(self) -> None:
+        """Stop the reload watcher and wait for it: a reload in progress
+        finishes first, and no reload restarts a query after this."""
+        if self._watcher is not None:
+            self._watch_stop.set()
+            self._watcher.join()
 
     def stop(self) -> None:
-        if self._watch_stop is not None:
-            self._watch_stop.set()
+        self.stop_watching()
         if self.query is not None:
             self.query.stop()

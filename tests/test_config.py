@@ -576,69 +576,18 @@ def test_config_streaming_daemon_mode(spark, tmp_path):
         )
 
 
-def test_config_from_udp_daemon(spark, tmp_path):
-    """`from udp <port> spool '<dir>'` round-trip: the daemon runner
-    starts the datagram bridge AND the streaming pipeline; live datagrams
-    land exactly-once in the manifested sink and KEEP landing (a second
-    wave arrives after the first is committed) — daemon parity for the
-    reference's primary transport."""
-    import socket
-    import time
+def test_config_from_udp_compile_errors(spark, tmp_path):
+    from beholder_spark.__main__ import main
 
-    from beholder_spark.plans import lineage as ln
-
-    spool = tmp_path / "spool"
-    cfg = (
-        f"from udp 0 spool '{spool}';\n"
-        "parse syslog keep-unparsed;\n"
-        "keep $severity $program $parse_ok;\n"
-    )
-    q, bridges = C.run_config_udp_daemon(
-        spark, cfg, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    try:
-        port = bridges[0].port
-        cli = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-
-        def send(lo, hi):
-            for i in range(lo, hi):
-                msg = f"<{i % 32}>1 2026-03-01T00:00:00Z h prog{i % 4} - - - d{i}"
-                cli.sendto(msg.encode(), ("127.0.0.1", port))
-
-        def rows():
-            try:
-                return ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch").count()
-            except Exception:
-                return 0  # sink dir not created yet
-
-        send(0, 30)
-        deadline = time.monotonic() + 90
-        while rows() < 30 and time.monotonic() < deadline:
-            time.sleep(0.5)
-        assert rows() == 30
-        send(30, 50)  # the daemon keeps ingesting after the first commit
-        deadline = time.monotonic() + 90
-        while rows() < 50 and time.monotonic() < deadline:
-            time.sleep(0.5)
-        cli.close()
-    finally:
-        q.stop()
-        for b in bridges:
-            b.stop()
-
-    got = ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch")
-    assert got.count() == 50  # exactly-once: no loss, no duplicates
-    assert got.filter("parse_ok").count() == 50
-    assert got.select("program").distinct().count() == 4
-
-
-def test_config_from_udp_compile_errors(spark):
     with pytest.raises(C.ConfigError, match="spool"):
         C.compile_config("from udp 5140;")(None, spark=spark)
     with pytest.raises(C.ConfigError, match="out of range"):
         C.compile_config("from udp 99999 spool '/tmp/x';")(None, spark=spark)
-    with pytest.raises(C.ConfigError, match="from udp"):
-        C.run_config_udp_daemon(spark, "from timer 5;", "/tmp/u1", "/tmp/u2")
+    # a daemon needs a listener source (`from udp`/`from tcp`) or --pages
+    conf = tmp_path / "timer.conf"
+    conf.write_text("from timer 5;")
+    with pytest.raises(SystemExit):
+        main(["--daemon", "--config", str(conf), "--out", str(tmp_path / "o")])
     # streaming sources through the BATCH runner fail with a front-end
     # error, not Spark's raw writeStream AnalysisException
     with pytest.raises(C.ConfigError, match="streaming sources"):
@@ -795,180 +744,265 @@ def test_write_shell_parallel_partitions(spark, tmp_path):
     assert got == sorted(f"r{i}" for i in range(100))
 
 
-def test_cli_daemon_udp(spark, tmp_path):
-    """`python -m beholder_spark --daemon -c <conf>` parity: a `from udp`
-    config starts the bridge + stream from the CLI entry point, live
-    datagrams land in the manifested sink, and --daemon-seconds bounds
-    the run (the test handle for Beholder's run-forever default)."""
-    import socket
-    import threading
+def _daemon_session():
+    """The session ``main`` reuses: ``get_spark`` returns the ACTIVE
+    session, which after an earlier foreachBatch test is a stream's
+    cloned session (its ``createDataFrame`` made it active), not the
+    fixture's — and each session lists only its own streaming queries."""
+    from beholder_spark.session import get_spark
+
+    return get_spark()
+
+
+def _wait_query(session, secs: float = 60) -> None:
+    """Block until the daemon's streaming query is active: the daemon
+    starts its bridges first, so their ports are bound by then (a
+    datagram sent before the bind is lost)."""
     import time
 
-    from beholder_spark.__main__ import main
-    from beholder_spark.plans import lineage as ln
+    deadline = time.monotonic() + secs
+    while not session.streams.active:
+        assert time.monotonic() < deadline, "daemon query never started"
+        time.sleep(0.2)
 
-    probe = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+
+def _run_daemon_cli(argv: list[str], traffic) -> int:
+    """Run ``main(argv)`` on the pytest main thread, where the daemon
+    installs its SIGTERM handler. A helper thread waits for the daemon's
+    query, runs ``traffic`` and SIGTERMs this process in a ``finally``.
+    A no-op handler around the call keeps a SIGTERM that lands after
+    ``main`` returned from killing the test process. Re-raises the
+    helper's failure; on a clean exit no query may outlive ``main``."""
+    import os
+    import signal
+    import threading
+
+    from beholder_spark.__main__ import main
+
+    session = _daemon_session()
+    errors: list[BaseException] = []
+
+    def helper():
+        try:
+            _wait_query(session)
+            traffic()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+        finally:
+            os.kill(os.getpid(), signal.SIGTERM)
+
+    prev = signal.signal(signal.SIGTERM, lambda *_: None)
+    t = threading.Thread(target=helper, daemon=True)
+    t.start()
+    try:
+        rc = main(argv)
+    finally:
+        t.join(120)
+        signal.signal(signal.SIGTERM, prev)
+    if errors:
+        raise errors[0]
+    assert not t.is_alive(), "traffic helper still running"
+    assert not session.streams.active
+    return rc
+
+
+def _free_port(kind) -> int:
+    import socket
+
+    probe = socket.socket(socket.AF_INET, kind)
     probe.bind(("127.0.0.1", 0))
     port = probe.getsockname()[1]
     probe.close()
+    return port
 
+
+def _wait_rows(spark, out: str, n: int, secs: float = 60):
+    """The manifested ``config_sink`` table once it holds ≥ n rows (or the
+    deadline passes); None while the sink dir does not exist yet."""
+    import time
+
+    from beholder_spark.plans import lineage as ln
+
+    deadline = time.monotonic() + secs
+    while True:
+        try:
+            got = ln.read_stage(spark, out, "config_sink", "_batch")
+            if got.count() >= n or time.monotonic() > deadline:
+                return got
+        except Exception:
+            if time.monotonic() > deadline:
+                return None
+        time.sleep(0.5)
+
+
+def _udp_daemon_conf(tmp_path):
+    """A `from udp` daemon config on a free port: (port, spool dir, conf)."""
+    import socket
+
+    port = _free_port(socket.SOCK_DGRAM)
     spool = tmp_path / "spool"
     conf = tmp_path / "d.conf"
     conf.write_text(
-        f"from udp {port} spool '{spool}';\nparse syslog keep-unparsed;\nkeep $severity $parse_ok;\n"
+        f"from udp {port} spool '{spool}';\n"
+        "parse syslog keep-unparsed;\nkeep $severity $program $parse_ok;\n"
     )
-    out = str(tmp_path / "out")
-    rc_box: list[int] = []
-    t = threading.Thread(
-        target=lambda: rc_box.append(
-            main(["--daemon", "--config", str(conf), "--out", out, "--daemon-seconds", "60"])
-        ),
-        daemon=True,
-    )
-    t.start()
-    time.sleep(3)  # bridge bind + stream start
+    return port, spool, conf
+
+
+def _send_udp(port: int, lo: int, hi: int) -> None:
+    import socket
 
     cli = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-    for i in range(15):
-        cli.sendto(f"<{i % 24}>1 2026-05-01T00:00:00Z h p - - - cli {i}".encode(), ("127.0.0.1", port))
+    for i in range(lo, hi):
+        msg = f"<{i % 32}>1 2026-03-01T00:00:00Z h prog{i % 4} - - - d{i}"
+        cli.sendto(msg.encode(), ("127.0.0.1", port))
     cli.close()
 
-    def rows():
-        try:
-            return ln.read_stage(spark, out, "config_sink", "_batch").count()
-        except Exception:
-            return 0
 
-    deadline = time.monotonic() + 55
-    while rows() < 15 and time.monotonic() < deadline:
-        time.sleep(0.5)
-    assert rows() == 15
-    t.join(90)
-    assert rc_box == [0]
+def test_config_from_udp_daemon(spark, tmp_path):
+    """`from udp <port> spool '<dir>'` round-trip through `--daemon`: the
+    entry point starts the datagram bridge AND the streaming pipeline;
+    live datagrams land exactly-once in the manifested sink and KEEP
+    landing (a second wave arrives after the first is committed) —
+    daemon parity for the reference's primary transport."""
+    port, _, conf = _udp_daemon_conf(tmp_path)
+    out = str(tmp_path / "out")
+    box = {}
+
+    def traffic():
+        _send_udp(port, 0, 30)
+        box["first"] = _wait_rows(spark, out, 30).count()
+        _send_udp(port, 30, 50)  # the daemon keeps ingesting after the first commit
+        box["got"] = _wait_rows(spark, out, 50)
+
+    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    assert box["first"] == 30
+    got = box["got"]
+    assert got.count() == 50  # exactly-once: no loss, no duplicates
+    assert got.filter("parse_ok").count() == 50
+    assert got.select("program").distinct().count() == 4
+
+
+def test_cli_daemon_udp(spark, tmp_path):
+    """`python -m beholder_spark --daemon --config <conf>` with a `from
+    udp` config: live datagrams land in the manifested sink, and SIGTERM
+    drains a spool file that arrived just before it, then exits 0."""
+    import os
+
+    port, spool, conf = _udp_daemon_conf(tmp_path)
+    out = str(tmp_path / "out")
+
+    def traffic():
+        _send_udp(port, 0, 15)
+        assert _wait_rows(spark, out, 15).count() == 15
+        # a complete spool file lands (hidden name → rename, as the bridge
+        # writes) right before SIGTERM: the drain must still commit it
+        tmp = spool / ".tmp-drain"
+        tmp.write_text(
+            "".join(f"<13>1 2026-03-01T00:00:01Z h drain - - - x{i}\n" for i in range(5))
+        )
+        os.rename(tmp, spool / "udp-drain.txt")
+
+    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    got = _wait_rows(spark, out, 20, secs=0)
+    assert got.count() == 20
+    assert got.filter("program = 'drain' AND parse_ok").count() == 5
+
+
+def _tcp_frame_daemon_conf(tmp_path):
+    """A `from tcp … as syslog-frame` daemon config on a free port:
+    (port, spool dir, conf)."""
+    import socket
+
+    port = _free_port(socket.SOCK_STREAM)
+    spool = tmp_path / "spool"
+    conf = tmp_path / "d.conf"
+    conf.write_text(
+        f"from tcp 127.0.0.1 {port} as syslog-frame spool '{spool}';\n"
+        "parse syslog keep-unparsed;\nkeep $severity $program $payload $parse_ok;\n"
+    )
+    return port, spool, conf
+
+
+def _send_frames(port: int, msgs: list[str]) -> None:
+    """Send ``msgs`` as RFC6587 octet-counted frames on one connection."""
+    import socket
+
+    cli = socket.create_connection(("127.0.0.1", port))
+    for m in msgs:
+        b = m.encode()
+        cli.sendall(str(len(b)).encode() + b" " + b)
+    cli.close()
 
 
 def test_cli_daemon_tcp_syslog_frame(spark, tmp_path):
     """CLI `--daemon` with a `from tcp … as syslog-frame` config: the
     RFC6587 frame bridge starts from the entry point (no --pages needed),
-    octet-counted frames land in the manifested sink, and the bounded
-    run exits 0 — full parity with the udp daemon path."""
-    import socket
-    import threading
-    import time
-
-    from beholder_spark.__main__ import main
-    from beholder_spark.plans import lineage as ln
-
-    # pre-probe a free TCP port (same pattern as the udp CLI test)
-    probe = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    probe.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    probe.bind(("127.0.0.1", 0))
-    port = probe.getsockname()[1]
-    probe.close()
-
-    spool = tmp_path / "spool"
-    conf = tmp_path / "d.conf"
-    conf.write_text(
-        f"from tcp 127.0.0.1 {port} as syslog-frame spool '{spool}';\n"
-        "parse syslog keep-unparsed;\nkeep $severity $parse_ok;\n"
-    )
+    octet-counted frames land in the manifested sink, and SIGTERM exits 0
+    — full parity with the udp daemon path."""
+    port, _, conf = _tcp_frame_daemon_conf(tmp_path)
     out = str(tmp_path / "out")
-    rc_box: list[int] = []
-    t = threading.Thread(
-        target=lambda: rc_box.append(
-            main(["--daemon", "--config", str(conf), "--out", out, "--daemon-seconds", "60"])
-        ),
-        daemon=True,
-    )
-    t.start()
-    # wait for the bridge to bind, then send octet-counted frames
-    deadline = time.monotonic() + 20
-    cli = None
-    while time.monotonic() < deadline:
-        try:
-            cli = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-            cli.connect(("127.0.0.1", port))
-            break
-        except OSError:
-            cli.close()
-            cli = None
-            time.sleep(0.3)
-    assert cli is not None, "frame bridge never bound its port"
-    for i in range(12):
-        msg = f"<{i % 16}>1 2026-05-02T00:00:00Z h p - - - cli tcp {i}".encode()
-        cli.sendall(str(len(msg)).encode() + b" " + msg)
-    cli.close()
+    msgs = [f"<{i % 16}>1 2026-05-02T00:00:00Z h p - - - cli tcp {i}" for i in range(12)]
+    box = {}
 
-    def rows():
-        try:
-            return ln.read_stage(spark, out, "config_sink", "_batch").count()
-        except Exception:
-            return 0
+    def traffic():
+        _send_frames(port, msgs)
+        box["got"] = _wait_rows(spark, out, len(msgs))
 
-    deadline = time.monotonic() + 55
-    while rows() < 12 and time.monotonic() < deadline:
-        time.sleep(0.5)
-    assert rows() == 12
-    t.join(90)
-    assert rc_box == [0]
+    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    assert box["got"].count() == 12
 
 
 def test_config_from_tcp_syslog_frame_daemon(spark, tmp_path):
-    """`from tcp <host> <port> as syslog-frame spool '<dir>'`: the daemon
-    runner starts the RFC6587 octet-counted TCP bridge; framed messages —
-    including one with embedded newlines — land exactly-once in the
-    manifested sink with the same rows as the batch engine."""
-    import socket
-    import time
+    """`from tcp <host> <port> as syslog-frame spool '<dir>'`: the config
+    declares the RFC6587 octet-counted TCP bridge and `--daemon` starts
+    it; framed messages — including one with embedded newlines — land
+    exactly-once in the manifested sink with the same rows as the batch
+    engine."""
+    from beholder_spark.sources import TcpSyslogFrameBridge
 
-    from beholder_spark.plans import lineage as ln
-
-    spool = tmp_path / "spool"
-    cfg = (
-        f"from tcp 127.0.0.1 0 as syslog-frame spool '{spool}';\n"
-        "parse syslog keep-unparsed;\n"
-        "keep $severity $program $payload $parse_ok;\n"
-    )
-    compiled = C.compile_config(cfg)
+    port, spool, conf = _tcp_frame_daemon_conf(tmp_path)
+    compiled = C.compile_config(conf.read_text())
     compiled(None, spark=spark)
-    assert compiled.tcp_frame_ingest == [
-        {"host": "127.0.0.1", "port": 0, "spool": str(spool)}
+    assert compiled.ingest == [
+        (TcpSyslogFrameBridge, {"spool_dir": str(spool), "host": "127.0.0.1", "port": port})
     ]
-
-    q, bridges = C.run_config_udp_daemon(
-        spark, cfg, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
+    out = str(tmp_path / "out")
     msgs = [f"<{i % 24}>1 2026-03-02T00:00:00Z h prog{i % 3} - - - f{i}" for i in range(25)]
     msgs.append("<7>1 2026-03-02T00:00:01Z h prog1 - - - over\ntwo lines")
-    try:
-        port = bridges[0].port
-        cli = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        cli.connect(("127.0.0.1", port))
-        for m in msgs:
-            b = m.encode()
-            cli.sendall(str(len(b)).encode() + b" " + b)
-        cli.close()
+    box = {}
 
-        def rows():
-            try:
-                return ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch").count()
-            except Exception:
-                return 0
+    def traffic():
+        _send_frames(port, msgs)
+        box["got"] = _wait_rows(spark, out, len(msgs))
 
-        deadline = time.monotonic() + 90
-        while rows() < len(msgs) and time.monotonic() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-        for b in bridges:
-            b.stop()
-
-    got = ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch")
+    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    got = box["got"]
     assert got.count() == len(msgs)  # exactly-once
     assert sorted(r.payload for r in got.filter("NOT parse_ok").collect()) == [
         "<7>1 2026-03-02T00:00:01Z h prog1 - - - over\ntwo lines"
     ]
     assert got.filter("parse_ok").count() == 25
+
+
+def test_cli_daemon_fails_when_query_stops_outside_sigterm(spark, tmp_path):
+    """The only exit 0 is a requested stop: a query stopped from outside
+    (no reload swap in progress) makes the daemon raise, and it leaves no
+    query running."""
+    _, _, conf = _udp_daemon_conf(tmp_path)
+    daemon = _daemon_session()
+
+    def traffic():
+        daemon.streams.active[0].stop()
+
+    argv = ["--daemon", "--config", str(conf), "--out", str(tmp_path / "out")]
+    with pytest.raises(RuntimeError, match="stopped outside a reload"):
+        _run_daemon_cli(argv, traffic)
+    assert not daemon.streams.active
 
 
 def test_config_from_tcp_framing_compile_errors(spark):

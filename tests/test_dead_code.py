@@ -13,7 +13,6 @@ ROOT = Path(__file__).resolve().parents[1]
 USERS = ["beholder_spark/**/*.py", "bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/*.py"]
 ALLOWED = {
     "fixtures.write_fixtures": "the test suite's fixture writer (conftest.py); tests/ is not scanned",
-    "config.run_config_udp_daemon": "second daemon runner; folds into the CLI once it can stop cleanly",
 }
 
 

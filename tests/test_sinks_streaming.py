@@ -32,7 +32,7 @@ def test_manifested_stream_sink_idempotent_under_replay(spark, tmp_path):
     hit the manifest anti-join and append nothing."""
     import shutil
 
-    from beholder_spark import streaming as st
+    from beholder_spark.config import run_config_stream
     from beholder_spark.plans import lineage as ln
 
     src_dir = str(tmp_path / "src")
@@ -41,7 +41,7 @@ def test_manifested_stream_sink_idempotent_under_replay(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_m")
 
     stream = spark.readStream.schema("id long, k string").parquet(src_dir)
-    q = st.write_manifested_stream(stream, out_root, "events", ckpt)
+    q = run_config_stream(spark, stream, "", out_root, ckpt, stage="events")
     q.awaitTermination(120)
     first = ln.read_stage(spark, out_root, "events", "_batch")
     assert first.count() == 200
@@ -49,7 +49,7 @@ def test_manifested_stream_sink_idempotent_under_replay(spark, tmp_path):
     # nuke the streaming checkpoint: Spark replays EVERY batch
     shutil.rmtree(ckpt)
     stream2 = spark.readStream.schema("id long, k string").parquet(src_dir)
-    q2 = st.write_manifested_stream(stream2, out_root, "events", ckpt)
+    q2 = run_config_stream(spark, stream2, "", out_root, ckpt, stage="events")
     q2.awaitTermination(120)
     again = ln.read_stage(spark, out_root, "events", "_batch")
     assert again.count() == 200  # no duplicates despite full replay
@@ -63,7 +63,7 @@ def test_manifested_stream_checkpoint_loss_with_grown_source(spark, tmp_path):
     file-content-keyed manifest must append exactly the new file's rows."""
     import shutil
 
-    from beholder_spark import streaming as st
+    from beholder_spark.config import run_config_stream
     from beholder_spark.plans import lineage as ln
 
     src_dir = str(tmp_path / "src")
@@ -72,7 +72,7 @@ def test_manifested_stream_checkpoint_loss_with_grown_source(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_m")
 
     stream = spark.readStream.schema("id long, k string").parquet(src_dir)
-    st.write_manifested_stream(stream, out_root, "events", ckpt).awaitTermination(120)
+    run_config_stream(spark, stream, "", out_root, ckpt, stage="events").awaitTermination(120)
     assert ln.read_stage(spark, out_root, "events", "_batch").count() == 100
 
     # checkpoint lost AND the source grew: replayed batch 0 = old+new files
@@ -81,7 +81,7 @@ def test_manifested_stream_checkpoint_loss_with_grown_source(spark, tmp_path):
         "append"
     ).parquet(src_dir)
     stream2 = spark.readStream.schema("id long, k string").parquet(src_dir)
-    st.write_manifested_stream(stream2, out_root, "events", ckpt).awaitTermination(120)
+    run_config_stream(spark, stream2, "", out_root, ckpt, stage="events").awaitTermination(120)
     again = ln.read_stage(spark, out_root, "events", "_batch")
     assert again.count() == 150  # new rows appended, old rows not duplicated
     assert again.select("id").distinct().count() == 150
