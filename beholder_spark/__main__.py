@@ -86,13 +86,15 @@ def _run_daemon(spark, p, args) -> int:
     All run under the hot-reload supervisor (SIGHUP / config-mtime swap
     of the pipeline STAGES — the listeners stay bound across reloads;
     changing ports/spools needs a restart, the spool directory being the
-    stable handoff point).
+    stable handoff point). One main-thread loop polls for a reload and
+    checks the bridges and the query once a second.
 
-    SIGTERM is the one clean stop: the reload watcher is joined (no
-    reload can restart a query), the bridges stop and flush their
-    buffers into the spool, the query processes everything available,
-    and the daemon exits 0. Any other end — a failed bridge, a query
-    that failed or was stopped from outside — raises (exit non-zero)."""
+    SIGTERM is the one clean stop: the loop ends (no reload can restart
+    a query), the bridges stop and flush their buffers into the spool,
+    the query processes everything available, and the daemon exits 0.
+    Any other end — a failed bridge, a query that failed or was stopped
+    from outside — raises (exit non-zero). The SIGTERM and SIGHUP
+    handlers are restored on return."""
     import os
     import signal
     import threading
@@ -121,11 +123,12 @@ def _run_daemon(spark, p, args) -> int:
         schema = spark.read.parquet(args.pages).schema
         stream_factory = lambda: spark.readStream.schema(schema).parquet(args.pages)  # noqa: E731
 
-    term: list[int] = []  # the handler only flags; the loop below drains
-    prev = None  # Python installs signal handlers from the main thread only
-    if threading.current_thread() is threading.main_thread():
-        prev = signal.signal(signal.SIGTERM, lambda *_: term.append(1))
     sup = C.ConfigStreamSupervisor(spark, args.config, stream_factory, args.out, ckpt)
+    term: list[int] = []  # the handlers only flag; the loop below acts
+    prev = {}  # Python installs signal handlers from the main thread only
+    if threading.current_thread() is threading.main_thread():
+        prev[signal.SIGTERM] = signal.signal(signal.SIGTERM, lambda *_: term.append(1))
+        prev[signal.SIGHUP] = signal.signal(signal.SIGHUP, lambda *_: setattr(sup, "hup", True))
     bridges = []
     try:
         for cls, kwargs in probe.ingest:
@@ -133,16 +136,20 @@ def _run_daemon(spark, p, args) -> int:
             b.start()
             bridges.append(b)
         sup.start()
-        sup.install_sighup()
-        sup.watch()
         src = ", ".join(f"{type(b).__name__} port {b.port}" for b in bridges) or args.pages
         print(f"daemon: {src} → {args.out} (SIGHUP/config edit reloads, SIGTERM stops)", flush=True)
         parts = (*bridges, sup)
+        refused = None  # the refusal last reported
         while not term:
+            if sup.poll():  # SIGHUP or a config edit → reload
+                print(f"daemon: reloaded {args.config} (generation {sup.generation})", flush=True)
+            elif sup.last_error is not refused:
+                refused = sup.last_error
+                if refused is not None:  # the old pipeline keeps running
+                    print(f"daemon: reload refused: {refused!r}", flush=True)
             for x in parts:
                 x.raise_if_failed()  # dead listener or query → exit non-zero
             sup.query.awaitTermination(1)
-        sup.stop_watching()
         for b in bridges:
             b.stop()  # flushes the buffer into the spool
         sup.query.processAllAvailable()
@@ -153,8 +160,8 @@ def _run_daemon(spark, p, args) -> int:
         sup.stop()
         for b in bridges:
             b.stop()
-        if prev is not None:
-            signal.signal(signal.SIGTERM, prev)
+        for sig, handler in prev.items():
+            signal.signal(sig, handler)
 
 
 if __name__ == "__main__":

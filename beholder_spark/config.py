@@ -54,7 +54,6 @@ from __future__ import annotations
 
 import os
 import re
-import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -240,9 +239,19 @@ class CompiledPipeline:
     # starts the listeners driver-side (Spark has no UDP source, and
     # RFC6587 frames may embed newlines the socket source can't carry)
     ingest: list[tuple[type, dict]] = field(default_factory=list)
+    # the live (streaming) scans the last invocation's `join { from udp|
+    # tcp … }` blocks built, in order: run_config_stream streams them in
+    # one union with the top-level source and passes each micro-batch's
+    # share of them back as ``replay``
+    streams: list[DataFrame] = field(default_factory=list)
 
-    def __call__(self, df: DataFrame | None = None, spark: SparkSession | None = None) -> DataFrame:
-        return self.transform(df, spark)
+    def __call__(
+        self,
+        df: DataFrame | None = None,
+        spark: SparkSession | None = None,
+        replay: list[DataFrame] | None = None,
+    ) -> DataFrame:
+        return self.transform(df, spark, replay)
 
 
 def _compile_set(df: DataFrame, cmd: Command) -> DataFrame:
@@ -588,9 +597,9 @@ def compile_config(text: str) -> CompiledPipeline:
     sinks: list[dict] = []
     compiled = CompiledPipeline(transform=None, sinks=sinks)
 
-    def transform(df: DataFrame | None = None, spark: SparkSession | None = None) -> DataFrame:
+    def transform(df: DataFrame | None, spark: SparkSession | None, replay) -> DataFrame:
         sinks.clear()  # fresh capture per invocation (reusable compile)
-        ctx = {"sinks": sinks, "buffer": None, "spark": spark}
+        ctx = {"sinks": sinks, "buffer": None, "spark": spark, "streams": [], "replay": replay}
         out = df
         for cmd in cmds:
             out = _apply(out, cmd, ctx)
@@ -598,6 +607,7 @@ def compile_config(text: str) -> CompiledPipeline:
             raise ConfigError("config has no source: pass a DataFrame or start with `from …`")
         compiled.source_df = ctx.get("source_df")
         compiled.ingest = ctx.get("ingest", [])
+        compiled.streams = ctx["streams"]
         return out
 
     compiled.transform = transform
@@ -627,6 +637,10 @@ def _apply(df: DataFrame | None, cmd: Command, ctx: dict) -> DataFrame:
         for sub in cmd.block or []:
             if sub.name == "from":
                 sub_df = _compile_from(df.sparkSession, sub, ctx)
+                if sub_df.isStreaming:  # a second live listener
+                    ctx["streams"].append(sub_df)
+                    if ctx["replay"] is not None:  # its share of the micro-batch
+                        sub_df = ctx["replay"][len(ctx["streams"]) - 1]
             else:
                 if sub_df is None:
                     raise ConfigError("join block must start with `from …`")
@@ -789,10 +803,13 @@ def run_config_stream(
 ):
     """Run a Beholder config as a LONG-RUNNING STREAM — the daemon
     execution mode the reference actually ships as (``--daemon``). The
-    SAME compiled command tree transforms the stream (every stage is a
-    column expression or when()-chain — mode-agnostic by construction),
-    and ONE foreachBatch writer lands each micro-batch through the batch
-    engine's manifest machinery (:func:`beholder_spark.plans.lineage.run_stage`)
+    SOURCE — the union of the top-level source and every ``join { from
+    udp|tcp … }`` listener — is streamed with ONE checkpoint; each
+    micro-batch re-runs the
+    SAME compiled command tree in BATCH mode (every stage is a column
+    expression or when()-chain — mode-agnostic by construction), and ONE
+    foreachBatch writer lands its frames through the batch engine's
+    manifest machinery (:func:`beholder_spark.plans.lineage.run_stage`)
     EXACTLY ONCE, even across streaming-checkpoint loss.
 
     Exactly-once survives a lost checkpoint because each row's manifest
@@ -806,15 +823,13 @@ def run_config_stream(
     provenance (non-file sources), rows key on ``_batch=b<id>`` and
     checkpoint loss is only replay-safe while the source is unchanged.
 
-    Without ``to file`` sinks the compiled frame itself is streamed and
-    lands at ``stage``. With sinks (``tee { to file '…' }`` + the main
-    flow — Beholder's bread-and-butter fan-out) the SOURCE is streamed
-    with ONE checkpoint, and each micro-batch re-runs the command tree in
-    BATCH mode: every sink lands at ``sink_0 … sink_{K-1}`` (declaration
-    order, its path fields as partition columns) and the final frame at
-    ``stage`` — exactly once PER SINK, surviving checkpoint loss and
-    supervisor config reloads. Non-file sinks (stdout/tcp/udp/shell) and
-    ``buffer N`` are rejected (see :func:`_check_stream_sinks`).
+    The final frame lands at ``stage``, and every ``to file`` sink
+    (``tee { to file '…' }`` + the main flow — Beholder's
+    bread-and-butter fan-out) at ``sink_0 … sink_{K-1}`` (declaration
+    order, its path fields as partition columns) — exactly once PER
+    SINK, surviving checkpoint loss and supervisor config reloads.
+    Non-file sinks (stdout/tcp/udp/shell) and ``buffer N`` are rejected
+    (see :func:`_check_stream_sinks`).
     ``stream_df=None`` makes the config self-sourcing (its top-level
     ``from udp|tcp`` builds the stream). Returns the started
     StreamingQuery.
@@ -823,10 +838,14 @@ def run_config_stream(
     from beholder_spark.streaming import batch_key_col
 
     compiled = compile_config(config_text)
-    final = compiled(stream_df, spark=spark)
+    compiled(stream_df, spark=spark)
     _check_stream_sinks(compiled)
-    fan_out = bool(compiled.sinks)
-    source = stream_df if stream_df is not None else compiled.source_df
+    # ONE streamed union of the live scans, each row tagged with its
+    # scan's index; a micro-batch splits it back into each scan's share
+    scans = [stream_df if stream_df is not None else compiled.source_df, *compiled.streams]
+    source = scans[0].withColumn("_scan", F.lit(0))
+    for i, s in enumerate(scans[1:], 1):
+        source = source.unionByName(s.withColumn("_scan", F.lit(i)), allowMissingColumns=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Deliberately NO persist of the batch slice: caching it severs
@@ -838,18 +857,22 @@ def run_config_stream(
         # files' rows. K sinks therefore recompute their transform
         # suffixes from the (small) spool micro-batch: correctness over
         # cached-once economics.
-        if fan_out:
-            batch_final = compiled(batch_df)  # recaptures the sinks in batch mode
-            frames = [
-                (f"sink_{i}", s["df"], s["partition_fields"]) for i, s in enumerate(compiled.sinks)
-            ]
-            frames.append((stage, batch_final, []))
-        else:
-            frames = [(stage, batch_df, [])]
+        share = [
+            batch_df.filter(F.col("_scan") == i).drop(*set(batch_df.columns) - set(s.columns))
+            for i, s in enumerate(scans)
+        ]
+        batch_final = compiled(share[0], replay=share[1:])  # recaptures the sinks in batch mode
+        frames = [
+            (f"sink_{i}", s["df"], s["partition_fields"]) for i, s in enumerate(compiled.sinks)
+        ]
+        frames.append((stage, batch_final, []))
         key = batch_key_col(batch_id)
         for st, frame, fields in frames:
             ln.run_stage(
-                frame.sparkSession,
+                # the caller's session, not the batch's clone: the
+                # manifest appends' createDataFrame makes its session the
+                # process-wide active one, which get_spark() then returns
+                spark,
                 out_root,
                 st,
                 frame.withColumn("_batch", key),
@@ -861,9 +884,7 @@ def run_config_stream(
                 rebalance=False,
             )
 
-    w = (source if fan_out else final).writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
+    w = source.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint_path)
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
@@ -889,10 +910,10 @@ class ConfigStreamSupervisor:
     Swap signals, mirroring the daemon contract:
 
     - explicit :meth:`reload` (the test / embedding API);
-    - :meth:`watch` — a poll thread that reloads when the config file's
-      mtime changes or a SIGHUP was received;
-    - :meth:`install_sighup` — registers the actual ``SIGHUP`` handler
-      (driver main thread) that flags the watcher.
+    - :meth:`poll` — reloads when :attr:`hup` is set (``--daemon``'s
+      ``SIGHUP`` handler sets it) or the config file's mtime moved.
+      ``--daemon`` calls it from its one-second main loop, so a reload
+      and the health check (:meth:`raise_if_failed`) never overlap.
 
     ``stream_factory`` must return a FRESH streaming DataFrame per call
     (a streaming scan is bound to its query); schema-changing reloads
@@ -919,14 +940,13 @@ class ConfigStreamSupervisor:
         self.config_text: str | None = None
         self.generation = 0  # bumps on every successful (re)start
         self.last_error: Exception | None = None
-        self._hup = False
-        self._watch_stop = None  # threading.Event when watching
-        self._watcher = None
-        # held across a reload's stop → restart, so raise_if_failed never
-        # mistakes a swap in progress for a dead query
-        self._swap = threading.Lock()
+        self.hup = False  # set by the SIGHUP handler; the next poll() reloads
+        self._mtime: float | None = None
 
     def start(self) -> "ConfigStreamSupervisor":
+        # mtime baseline BEFORE the read: an edit landing after it moves
+        # the mtime, so the next poll() applies it
+        self._mtime = os.path.getmtime(self.config_path)
         with open(self.config_path, encoding="utf-8") as f:
             text = f.read()
         self._start_query(text)
@@ -949,15 +969,16 @@ class ConfigStreamSupervisor:
         """Re-read the config file; swap if it changed AND compiles.
 
         Returns True on swap. Unchanged text → False (no churn). Broken
-        text → False with the error in :attr:`last_error`; the OLD
-        pipeline keeps running untouched (reference SIGHUP semantics).
+        text or an unreadable file (say, unlinked mid-deploy) → False with
+        the error in :attr:`last_error`; the OLD pipeline keeps running
+        untouched (reference SIGHUP semantics).
         """
-        self._hup = False
-        with open(self.config_path, encoding="utf-8") as f:
-            text = f.read()
-        if text == self.config_text:
-            return False
+        self.hup = False
         try:
+            with open(self.config_path, encoding="utf-8") as f:
+                text = f.read()
+            if text == self.config_text:
+                return False
             # full dry validation BEFORE touching the running query:
             # parse, compile, force schema analysis on a fresh scan, AND
             # apply run_config_stream's own restrictions (a `to …` sink
@@ -974,80 +995,43 @@ class ConfigStreamSupervisor:
             return False
         self.last_error = None
         old_text = self.config_text
-        with self._swap:
-            self.query.stop()  # micro-batch boundary; manifested sink is swap-safe
-            try:
-                self._start_query(text)
-            except Exception as e:  # noqa: BLE001 — dry-validation gap
-                # the old query is already stopped: roll back to the old
-                # pipeline rather than leaving the daemon dead (if even the
-                # rollback fails, that is genuinely fatal: it raises, and
-                # raise_if_failed reports the stopped query)
-                self.last_error = e
-                self._start_query(old_text)
-                return False
+        self.query.stop()  # micro-batch boundary; manifested sink is swap-safe
+        try:
+            self._start_query(text)
+        except Exception as e:  # noqa: BLE001 — dry-validation gap
+            # the old query is already stopped: roll back to the old
+            # pipeline rather than leaving the daemon dead (if even the
+            # rollback fails, that is genuinely fatal: it raises)
+            self.last_error = e
+            self._start_query(old_text)
+            return False
         return True
 
-    def raise_if_failed(self) -> None:
-        """Raise RuntimeError if the query is inactive outside a reload
-        swap — it failed, was stopped from outside, or a reload's
-        rollback failed — so the daemon exits non-zero instead of idling
-        healthy (the bridges' :meth:`raise_if_failed` contract)."""
-        with self._swap:
-            if not self.query.isActive:
-                raise RuntimeError(
-                    f"streaming query stopped outside a reload "
-                    f"(generation {self.generation}, last_error={self.last_error!r}, "
-                    f"exception={self.query.exception()})"
-                )
-
-    def install_sighup(self) -> bool:
-        """Register the real SIGHUP handler (driver main thread only —
-        Python restricts signal.signal to it; returns False when called
-        elsewhere, e.g. an embedded/test thread, where the mtime watcher
-        alone drives reloads). The handler only flags; the watcher thread
-        performs the swap — signal-handler-safe."""
-        import signal
-
+    def poll(self) -> bool:
+        """:meth:`reload` if :attr:`hup` is set or the config file's mtime
+        moved since the last look; returns True on swap."""
         try:
-            signal.signal(signal.SIGHUP, lambda *_: setattr(self, "_hup", True))
-            return True
-        except ValueError:  # not the main thread
+            mtime = os.path.getmtime(self.config_path)
+        except OSError:
+            return False  # config mid-rewrite; the next poll sees it
+        if not self.hup and mtime == self._mtime:
             return False
+        self._mtime = mtime
+        return self.reload()
 
-    def watch(self, poll_secs: float = 1.0) -> None:
-        """Start the reload watcher: polls config mtime + the SIGHUP flag."""
-        self._watch_stop = threading.Event()
-        mtime = os.path.getmtime(self.config_path)
-
-        def loop():
-            nonlocal mtime
-            # close the start()→watch() gap: an edit landing between the
-            # two would update the mtime baseline without ever being
-            # applied — reload() itself compares TEXT, so one initial
-            # call is a no-op unless that race actually happened
-            if self.query is not None:
-                self.reload()
-            while not self._watch_stop.wait(poll_secs):
-                try:
-                    m = os.path.getmtime(self.config_path)
-                except OSError:
-                    continue  # config mid-rewrite; retry next poll
-                if self._hup or m != mtime:
-                    mtime = m
-                    self.reload()
-
-        self._watcher = threading.Thread(target=loop, daemon=True)
-        self._watcher.start()
-
-    def stop_watching(self) -> None:
-        """Stop the reload watcher and wait for it: a reload in progress
-        finishes first, and no reload restarts a query after this."""
-        if self._watcher is not None:
-            self._watch_stop.set()
-            self._watcher.join()
+    def raise_if_failed(self) -> None:
+        """Raise RuntimeError if the query is inactive — it failed or was
+        stopped from outside — so the daemon exits non-zero instead of
+        idling healthy (the bridges' :meth:`raise_if_failed` contract).
+        Call it from the thread that calls :meth:`poll`: a reload in
+        progress is then never mistaken for a dead query."""
+        if not self.query.isActive:
+            raise RuntimeError(
+                f"streaming query stopped outside a reload "
+                f"(generation {self.generation}, last_error={self.last_error!r}, "
+                f"exception={self.query.exception()})"
+            )
 
     def stop(self) -> None:
-        self.stop_watching()
         if self.query is not None:
             self.query.stop()

@@ -11,10 +11,16 @@ from __future__ import annotations
 import os
 import socket as _socket
 import threading
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _tag(df: DataFrame, source_tag: str | None) -> DataFrame:
+    """The ``source`` column (Beholder ``$from``) when a tag is given."""
+    return df if source_tag is None else df.withColumn("source", F.lit(source_tag))
 
 
 def from_parquet(spark: SparkSession, path: str, source_tag: str | None = None) -> DataFrame:
@@ -24,10 +30,7 @@ def from_parquet(spark: SparkSession, path: str, source_tag: str | None = None) 
     e.g. ``udp://0.0.0.0:5140``). A literal column costs nothing and
     keeps routing predicates on real columns for pushdown.
     """
-    df = spark.read.parquet(path)
-    if source_tag is not None:
-        df = df.withColumn("source", F.lit(source_tag))
-    return df
+    return _tag(spark.read.parquet(path), source_tag)
 
 
 def from_text_lines(spark: SparkSession, path: str, source_tag: str | None = None) -> DataFrame:
@@ -35,10 +38,7 @@ def from_text_lines(spark: SparkSession, path: str, source_tag: str | None = Non
 
     Each line → one message with ``payload`` (Beholder ``$payload``).
     """
-    df = spark.read.text(path).withColumnRenamed("value", "payload")
-    if source_tag is not None:
-        df = df.withColumn("source", F.lit(source_tag))
-    return df
+    return _tag(spark.read.text(path).withColumnRenamed("value", "payload"), source_tag)
 
 
 def from_timer(spark: SparkSession, n: int, source_tag: str = "timer") -> DataFrame:
@@ -81,17 +81,17 @@ def from_socket_stream(
         .load()
         .withColumnRenamed("value", "payload")
     )
-    if source_tag is not None:
-        df = df.withColumn("source", F.lit(source_tag))
-    return df
+    return _tag(df, source_tag)
 
 
 class _SpoolBridgeBase:
-    """Shared listener→atomic-spool-file machinery: message buffering,
-    atomic flush (hidden tmp → rename, visible to the tailing file
-    stream only complete), error recording, and the never-silent-loss
-    health surface (:meth:`raise_if_failed`). Subclasses implement the
-    transport-specific listener loop and the spool serialization."""
+    """Shared listener→atomic-spool-file machinery: the listener thread
+    and its loop, message buffering, atomic flush (hidden tmp → rename,
+    visible to the tailing file stream only complete), error recording,
+    and the never-silent-loss health surface (:meth:`raise_if_failed`).
+    Subclasses bind the socket (:meth:`_bind`), serve one receive or
+    accept per loop pass (:meth:`_serve_once`) and may override the spool
+    serialization and the pre-final-flush :meth:`_drain`."""
 
     _file_prefix = "msg"
     _file_suffix = ".txt"
@@ -131,6 +131,9 @@ class _SpoolBridgeBase:
     # consecutive spool-write failures before the bridge declares itself
     # failed (daemon exits non-zero instead of buffering toward OOM)
     FLUSH_FAIL_LIMIT = 20
+    # consecutive receive/accept failures before the same (a dead listener
+    # socket, fd exhaustion)
+    LISTEN_FAIL_LIMIT = 50
     # hard bound on buffered-but-unflushed messages: past this the bridge
     # FAILS (counted, surfaced) rather than growing without bound while a
     # full/unwritable spool disk keeps every flush erroring
@@ -186,6 +189,52 @@ class _SpoolBridgeBase:
                 # the making (buffer grows, nothing lands) — surface it
                 self.failed = True
 
+    def start(self) -> int:
+        """Bind the listener, start its thread; returns the bound port."""
+        self._sock = self._bind()
+        self._sock.settimeout(0.2)
+        self.port = self._sock.getsockname()[1]
+        self._thread = threading.Thread(target=self._listen, daemon=True)
+        self._thread.start()
+        return self.port
+
+    def _listen(self) -> None:
+        last = time.monotonic()
+        consecutive = 0
+        while not self._stop.is_set():
+            try:
+                self._serve_once()
+                consecutive = 0
+            except TimeoutError:
+                consecutive = 0
+            except Exception as exc:  # noqa: BLE001 — never die silently
+                # Never-silent-loss contract (SURVEY §2 P7): a transient
+                # receive/accept/spool error must not kill the listener
+                # thread while the daemon keeps looking healthy. Record it,
+                # back off, retry; a sustained error burst marks the
+                # bridge FAILED so raise_if_failed()/the daemon loop can
+                # exit non-zero instead of idling with zero ingest.
+                self._record_error(exc)
+                consecutive += 1
+                if consecutive >= self.LISTEN_FAIL_LIMIT:
+                    self.failed = True
+                    break
+                time.sleep(0.05)
+            now = time.monotonic()
+            if self._buf and (len(self._buf) >= self.flush_lines or now - last >= self.flush_secs):
+                self._flush_guarded()
+                last = now
+        self._drain()
+        try:
+            self.flush()
+        except Exception as exc:  # noqa: BLE001
+            self._record_error(exc)
+            self.failed = True
+        self._sock.close()
+
+    def _drain(self) -> None:
+        """Let in-flight receivers finish before the final flush."""
+
     def raise_if_failed(self) -> None:
         """Surface a dead/failing listener to the owner (daemon loop):
         raises RuntimeError if the listener thread died or marked itself
@@ -225,55 +274,15 @@ class UdpSpoolBridge(_SpoolBridgeBase):
 
     _file_prefix = "udp"
 
-    def start(self) -> int:
+    def _bind(self) -> _socket.socket:
         sock = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
         sock.bind((self.host, self._want_port))
-        sock.settimeout(0.2)
-        self.port = sock.getsockname()[1]
-        self._sock = sock
+        return sock
 
-        def loop():
-            import time as _time
-
-            last = _time.monotonic()
-            consecutive = 0
-            while not self._stop.is_set():
-                try:
-                    data, _ = sock.recvfrom(65536)
-                    line = data.decode("utf-8", errors="replace")
-                    self._append(line.replace("\r", " ").replace("\n", " "))
-                    consecutive = 0
-                except TimeoutError:
-                    consecutive = 0
-                except Exception as exc:  # noqa: BLE001 — never die silently
-                    # Never-silent-loss contract (SURVEY §2 P7): a transient
-                    # recvfrom/spool error must not kill the listener thread
-                    # while the daemon keeps looking healthy. Record it,
-                    # back off, retry; a sustained error burst marks the
-                    # bridge FAILED so raise_if_failed()/the daemon loop can
-                    # exit non-zero instead of idling with zero ingest.
-                    self._record_error(exc)
-                    consecutive += 1
-                    if consecutive >= 50:
-                        self.failed = True
-                        break
-                    _time.sleep(0.05)
-                now = _time.monotonic()
-                if self._buf and (
-                    len(self._buf) >= self.flush_lines or now - last >= self.flush_secs
-                ):
-                    self._flush_guarded()
-                    last = now
-            try:
-                self.flush()
-            except Exception as exc:  # noqa: BLE001
-                self._record_error(exc)
-                self.failed = True
-            sock.close()
-
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
-        return self.port
+    def _serve_once(self) -> None:
+        data, _ = self._sock.recvfrom(65536)
+        line = data.decode("utf-8", errors="replace")
+        self._append(line.replace("\r", " ").replace("\n", " "))
 
 
 def from_udp_stream(spark: SparkSession, spool_dir: str, source_tag: str | None = None) -> DataFrame:
@@ -282,10 +291,7 @@ def from_udp_stream(spark: SparkSession, spool_dir: str, source_tag: str | None 
     scan (``payload`` [+ ``source``]), so the same stage compiler runs
     unchanged on live UDP ingest."""
     os.makedirs(spool_dir, exist_ok=True)
-    df = spark.readStream.text(spool_dir).withColumnRenamed("value", "payload")
-    if source_tag is not None:
-        df = df.withColumn("source", F.lit(source_tag))
-    return df
+    return _tag(spark.readStream.text(spool_dir).withColumnRenamed("value", "payload"), source_tag)
 
 
 def from_internal_log(spark: SparkSession, root: str, source_tag: str | None = None) -> DataFrame:
@@ -434,61 +440,26 @@ class TcpSyslogFrameBridge(_SpoolBridgeBase):
                 self._append(buf.decode("utf-8", errors="replace"))
             conn.close()
 
-    def start(self) -> int:
+    def _bind(self) -> _socket.socket:
         sock = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
         sock.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
         sock.bind((self.host, self._want_port))
         sock.listen(16)
-        sock.settimeout(0.2)
-        self.port = sock.getsockname()[1]
-        self._sock = sock
         self._conn_threads: list[threading.Thread] = []
+        return sock
 
-        def loop():
-            import time as _time
+    def _serve_once(self) -> None:
+        conn, _ = self._sock.accept()
+        t = threading.Thread(target=self._handle_conn, args=(conn,), daemon=True)
+        t.start()
+        # prune finished handlers so a weeks-long daemon with
+        # reconnecting relays doesn't accumulate dead Threads
+        self._conn_threads = [x for x in self._conn_threads if x.is_alive()]
+        self._conn_threads.append(t)
 
-            last = _time.monotonic()
-            consecutive = 0
-            while not self._stop.is_set():
-                try:
-                    conn, _ = sock.accept()
-                    t = threading.Thread(target=self._handle_conn, args=(conn,), daemon=True)
-                    t.start()
-                    # prune finished handlers so a weeks-long daemon with
-                    # reconnecting relays doesn't accumulate dead Threads
-                    self._conn_threads = [x for x in self._conn_threads if x.is_alive()]
-                    self._conn_threads.append(t)
-                    consecutive = 0
-                except TimeoutError:
-                    consecutive = 0
-                except Exception as exc:  # noqa: BLE001 — see UdpSpoolBridge
-                    # sustained accept() failure (fd exhaustion, dead
-                    # listener socket) must mark the bridge FAILED so the
-                    # daemon exits non-zero instead of idling healthy
-                    self._record_error(exc)
-                    consecutive += 1
-                    if consecutive >= 50:
-                        self.failed = True
-                        break
-                    _time.sleep(0.05)
-                now = _time.monotonic()
-                if self._buf and (
-                    len(self._buf) >= self.flush_lines or now - last >= self.flush_secs
-                ):
-                    self._flush_guarded()
-                    last = now
-            for t in self._conn_threads:
-                t.join(2)
-            try:
-                self.flush()
-            except Exception as exc:  # noqa: BLE001
-                self._record_error(exc)
-                self.failed = True
-            sock.close()
-
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
-        return self.port
+    def _drain(self) -> None:
+        for t in self._conn_threads:
+            t.join(2)
 
 
 def from_tcp_frame_stream(
@@ -500,10 +471,7 @@ def from_tcp_frame_stream(
     stage compiler runs unchanged; unlike the text spool, frames with
     embedded newlines round-trip bit-exact through the JSON escaping."""
     os.makedirs(spool_dir, exist_ok=True)
-    df = spark.readStream.schema("payload STRING").json(spool_dir)
-    if source_tag is not None:
-        df = df.withColumn("source", F.lit(source_tag))
-    return df
+    return _tag(spark.readStream.schema("payload STRING").json(spool_dir), source_tag)
 
 
 def union_sources(*dfs: DataFrame) -> DataFrame:

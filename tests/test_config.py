@@ -576,6 +576,22 @@ def test_config_streaming_daemon_mode(spark, tmp_path):
         )
 
 
+def test_config_stream_keeps_caller_session_active(spark, tmp_path):
+    """A micro-batch's manifest appends run on the caller's session, not
+    the stream's clone: after a streamed batch ``get_spark()`` still
+    returns the caller's session (where ``main`` lists its queries)."""
+    from beholder_spark.plans import lineage as ln
+    from beholder_spark.session import get_spark
+
+    src_dir = str(tmp_path / "src")
+    spark.range(10).selectExpr("CAST(id AS STRING) AS payload").write.parquet(src_dir)
+    stream = spark.readStream.schema("payload string").parquet(src_dir)
+    q = C.run_config_stream(spark, stream, "", str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch").count() == 10
+    assert get_spark() is spark
+
+
 def test_config_from_udp_compile_errors(spark, tmp_path):
     from beholder_spark.__main__ import main
 
@@ -670,36 +686,40 @@ def test_config_hot_reload_swaps_pipeline(spark, tmp_path):
         sup.stop()
 
 
-def test_config_watcher_and_sighup_trigger_reload(tmp_path):
-    """The watch thread reloads on config mtime change and on SIGHUP —
-    and does NOT churn while the file is unchanged."""
+def test_config_poll_reloads_on_mtime_or_hup(tmp_path):
+    """poll() reloads when the config's mtime moved since start() or the
+    last poll, or when the SIGHUP flag ``hup`` is set — and does NOT
+    churn while the file is unchanged. No thread, no Spark."""
     import os
-    import signal
-    import time
 
     cfg = tmp_path / "c.conf"
     cfg.write_text("keep $a;")
     sup = C.ConfigStreamSupervisor(None, str(cfg), None, "", "")
     calls = []
-    sup.reload = lambda: calls.append(1)
-    sup.watch(0.05)
-    try:
-        time.sleep(0.3)
-        assert not calls  # unchanged file: no reload churn
-        cfg.write_text("keep $b;")
-        deadline = time.monotonic() + 5
-        while not calls and time.monotonic() < deadline:
-            time.sleep(0.05)
-        assert calls  # mtime change → reload
-        calls.clear()
-        sup.install_sighup()
-        os.kill(os.getpid(), signal.SIGHUP)
-        deadline = time.monotonic() + 5
-        while not calls and time.monotonic() < deadline:
-            time.sleep(0.05)
-        assert calls  # SIGHUP → reload
-    finally:
-        sup._watch_stop.set()
+
+    def reload():
+        calls.append(1)
+        sup.hup = False
+        return True
+
+    sup._start_query = lambda text: None
+    sup.reload = reload
+    sup.start()
+    assert sup.poll() is False and not calls  # unchanged file: no reload churn
+    st = cfg.stat()
+    os.utime(cfg, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert sup.poll() is True and calls == [1]  # mtime moved → reload
+    assert sup.poll() is False and calls == [1]  # the baseline follows it
+    sup.hup = True
+    assert sup.poll() is True and calls == [1, 1]  # SIGHUP flag → reload
+    assert sup.poll() is False and calls == [1, 1]
+    # a config unlinked mid-deploy: poll() waits for it, and a real
+    # reload whose read loses that race is refused, not raised
+    del sup.reload
+    cfg.unlink()
+    sup.hup = True
+    assert sup.poll() is False and sup.hup
+    assert sup.reload() is False and isinstance(sup.last_error, FileNotFoundError)
 
 
 def test_config_parse_fieldpack(spark):
@@ -744,16 +764,6 @@ def test_write_shell_parallel_partitions(spark, tmp_path):
     assert got == sorted(f"r{i}" for i in range(100))
 
 
-def _daemon_session():
-    """The session ``main`` reuses: ``get_spark`` returns the ACTIVE
-    session, which after an earlier foreachBatch test is a stream's
-    cloned session (its ``createDataFrame`` made it active), not the
-    fixture's — and each session lists only its own streaming queries."""
-    from beholder_spark.session import get_spark
-
-    return get_spark()
-
-
 def _wait_query(session, secs: float = 60) -> None:
     """Block until the daemon's streaming query is active: the daemon
     starts its bridges first, so their ports are bound by then (a
@@ -766,20 +776,22 @@ def _wait_query(session, secs: float = 60) -> None:
         time.sleep(0.2)
 
 
-def _run_daemon_cli(argv: list[str], traffic) -> int:
+def _run_daemon_cli(session, argv: list[str], traffic) -> int:
     """Run ``main(argv)`` on the pytest main thread, where the daemon
-    installs its SIGTERM handler. A helper thread waits for the daemon's
-    query, runs ``traffic`` and SIGTERMs this process in a ``finally``.
-    A no-op handler around the call keeps a SIGTERM that lands after
-    ``main`` returned from killing the test process. Re-raises the
-    helper's failure; on a clean exit no query may outlive ``main``."""
+    installs its SIGTERM and SIGHUP handlers. A helper thread waits for
+    the daemon's query, runs ``traffic`` and SIGTERMs this process in a
+    ``finally``. A no-op handler around the call keeps a SIGTERM that
+    lands after ``main`` returned from killing the test process.
+    Re-raises the helper's failure; on a clean exit no query may outlive
+    ``main`` and both signal handlers are back to what they were.
+    ``session`` is the ``spark`` fixture: ``main``'s ``get_spark`` returns
+    that same active session, where the daemon's query is listed."""
     import os
     import signal
     import threading
 
     from beholder_spark.__main__ import main
 
-    session = _daemon_session()
     errors: list[BaseException] = []
 
     def helper():
@@ -792,10 +804,12 @@ def _run_daemon_cli(argv: list[str], traffic) -> int:
             os.kill(os.getpid(), signal.SIGTERM)
 
     prev = signal.signal(signal.SIGTERM, lambda *_: None)
+    before = {sig: signal.getsignal(sig) for sig in (signal.SIGTERM, signal.SIGHUP)}
     t = threading.Thread(target=helper, daemon=True)
     t.start()
     try:
         rc = main(argv)
+        after = {sig: signal.getsignal(sig) for sig in before}
     finally:
         t.join(120)
         signal.signal(signal.SIGTERM, prev)
@@ -803,6 +817,7 @@ def _run_daemon_cli(argv: list[str], traffic) -> int:
         raise errors[0]
     assert not t.is_alive(), "traffic helper still running"
     assert not session.streams.active
+    assert after == before, "main left a signal handler installed"
     return rc
 
 
@@ -875,7 +890,7 @@ def test_config_from_udp_daemon(spark, tmp_path):
         _send_udp(port, 30, 50)  # the daemon keeps ingesting after the first commit
         box["got"] = _wait_rows(spark, out, 50)
 
-    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
     assert rc == 0
     assert box["first"] == 30
     got = box["got"]
@@ -904,11 +919,96 @@ def test_cli_daemon_udp(spark, tmp_path):
         )
         os.rename(tmp, spool / "udp-drain.txt")
 
-    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
     assert rc == 0
     got = _wait_rows(spark, out, 20, secs=0)
     assert got.count() == 20
     assert got.filter("program = 'drain' AND parse_ok").count() == 5
+
+
+def test_cli_daemon_sighup_reloads(spark, tmp_path, capsys):
+    """SIGHUP reloads the CLI daemon from its main loop: the config is
+    rewritten with its mtime kept (so only the signal can trigger the
+    swap), the query restarts on the same checkpoint, and rows before and
+    after the swap land exactly once under the old and the new config. A
+    broken config sent first is refused, reported, and leaves the old
+    query running."""
+    import os
+    import signal
+    import socket
+    import time
+
+    port = _free_port(socket.SOCK_DGRAM)
+    conf = tmp_path / "d.conf"
+    text = (
+        f"from udp {port} spool '{tmp_path / 'spool'}';\n"
+        "parse syslog keep-unparsed;\nset $ver '{ver}';\nkeep $ver $severity $parse_ok;\n"
+    )
+    conf.write_text(text.replace("{ver}", "v1"))
+    out = str(tmp_path / "out")
+    box = {}
+
+    def rewrite(new_text):  # new text, old mtime: only SIGHUP can reload it
+        new = tmp_path / "d.conf.new"
+        new.write_text(new_text)
+        st = conf.stat()
+        os.utime(new, ns=(st.st_atime_ns, st.st_mtime_ns))
+        os.replace(new, conf)
+        os.kill(os.getpid(), signal.SIGHUP)
+
+    def traffic():
+        _send_udp(port, 0, 10)
+        assert _wait_rows(spark, out, 10).count() == 10
+        run_id = spark.streams.active[0].runId
+        rewrite(text.replace("{ver}", "v2") + "parse nonsense;\n")  # refused: v1 keeps running
+        deadline = time.monotonic() + 60
+        while "daemon: reload refused" not in box.setdefault("out", ""):
+            assert time.monotonic() < deadline, "the refused reload was not reported"
+            time.sleep(0.2)
+            box["out"] += capsys.readouterr().out
+        assert [q.runId for q in spark.streams.active] == [run_id]
+        rewrite(text.replace("{ver}", "v2"))
+        deadline = time.monotonic() + 60
+        while not [q for q in spark.streams.active if q.runId != run_id]:
+            assert time.monotonic() < deadline, "SIGHUP did not reload the daemon"
+            time.sleep(0.2)
+        _send_udp(port, 10, 18)
+        got = _wait_rows(spark, out, 18)
+        box["vers"] = {r.ver: r["count"] for r in got.groupBy("ver").count().collect()}
+
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    assert box["vers"] == {"v1": 10, "v2": 8}
+    assert "daemon: reloaded" in box["out"] + capsys.readouterr().out
+
+
+def test_cli_daemon_join_two_listeners(spark, tmp_path):
+    """A sinkless daemon whose config joins a second listener (`join {
+    from udp … }`, a stream union) starts both bridges and lands each
+    one's datagrams exactly once."""
+    import socket
+
+    ports = [_free_port(socket.SOCK_DGRAM) for _ in range(2)]
+    conf = tmp_path / "d.conf"
+    conf.write_text(
+        f"from udp {ports[0]} spool '{tmp_path / 'spool0'}';\n"
+        f"join {{ from udp {ports[1]} spool '{tmp_path / 'spool1'}'; }}\n"
+        "parse syslog keep-unparsed;\nkeep $source $program $parse_ok;\n"
+    )
+    out = str(tmp_path / "out")
+    box = {}
+
+    def traffic():
+        _send_udp(ports[0], 0, 10)
+        _send_udp(ports[1], 10, 16)
+        got = _wait_rows(spark, out, 16)
+        box["by_source"] = {r.source: r["count"] for r in got.groupBy("source").count().collect()}
+        box["parsed"] = got.filter("parse_ok").count()
+
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
+    assert rc == 0
+    assert box["by_source"] == {f"udp://0.0.0.0:{ports[0]}": 10, f"udp://0.0.0.0:{ports[1]}": 6}
+    assert box["parsed"] == 16
 
 
 def _tcp_frame_daemon_conf(tmp_path):
@@ -951,7 +1051,7 @@ def test_cli_daemon_tcp_syslog_frame(spark, tmp_path):
         _send_frames(port, msgs)
         box["got"] = _wait_rows(spark, out, len(msgs))
 
-    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
     assert rc == 0
     assert box["got"].count() == 12
 
@@ -979,7 +1079,7 @@ def test_config_from_tcp_syslog_frame_daemon(spark, tmp_path):
         _send_frames(port, msgs)
         box["got"] = _wait_rows(spark, out, len(msgs))
 
-    rc = _run_daemon_cli(["--daemon", "--config", str(conf), "--out", out], traffic)
+    rc = _run_daemon_cli(spark, ["--daemon", "--config", str(conf), "--out", out], traffic)
     assert rc == 0
     got = box["got"]
     assert got.count() == len(msgs)  # exactly-once
@@ -994,15 +1094,14 @@ def test_cli_daemon_fails_when_query_stops_outside_sigterm(spark, tmp_path):
     (no reload swap in progress) makes the daemon raise, and it leaves no
     query running."""
     _, _, conf = _udp_daemon_conf(tmp_path)
-    daemon = _daemon_session()
 
     def traffic():
-        daemon.streams.active[0].stop()
+        spark.streams.active[0].stop()
 
     argv = ["--daemon", "--config", str(conf), "--out", str(tmp_path / "out")]
     with pytest.raises(RuntimeError, match="stopped outside a reload"):
-        _run_daemon_cli(argv, traffic)
-    assert not daemon.streams.active
+        _run_daemon_cli(spark, argv, traffic)
+    assert not spark.streams.active
 
 
 def test_config_from_tcp_framing_compile_errors(spark):

@@ -14,6 +14,7 @@ import socket
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from beholder_spark import sources
@@ -389,17 +390,16 @@ def test_bridge_buffer_overflow_is_counted_and_fails(tmp_path):
     assert bridge.failed is True  # and surfaced, never silent
 
 
-def test_tcp_bridge_dead_listener_socket_escalates(tmp_path):
-    import time
-
-    import pytest
-
-    bridge = sources.TcpSyslogFrameBridge(str(tmp_path / "sp"), flush_secs=30)
+@pytest.mark.parametrize(
+    "bridge_cls", [sources.UdpSpoolBridge, sources.TcpSyslogFrameBridge], ids=["udp", "tcp"]
+)
+def test_bridge_dead_listener_socket_escalates(tmp_path, bridge_cls):
+    bridge = bridge_cls(str(tmp_path / "sp"), flush_secs=30)
     bridge.start()
     try:
-        # kill the listener socket underneath the accept loop: every
-        # accept() now raises OSError; the loop must escalate to failed
-        # within its 50-consecutive budget instead of spinning forever
+        # kill the listener socket underneath the listener loop: every
+        # recvfrom()/accept() now raises OSError; the loop must escalate
+        # to failed within its 50-consecutive budget instead of spinning
         bridge._sock.close()
         deadline = time.monotonic() + 15
         while not bridge.failed and time.monotonic() < deadline:
